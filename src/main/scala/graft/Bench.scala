@@ -29,27 +29,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * written to SPARK_GRAFT_PLAN_META (default target/bench_plan_meta.json)
   * and echoed to stderr — seven rounds showed up-to-16x per-query
   * wall-time noise on identical bytecode, so plan identity, not
-  * seconds, is the regression signal. Stdout keeps the single JSON
-  * line of the driver contract.
+  * seconds, is the regression signal (`tools/plan_diff.py` compares
+  * two such files). A failed phase (warmup, timed, plan-meta,
+  * shuffle-meta) prints `[bench] <query> <phase> failed: <class>:
+  * <message>` to stderr and lands in the query's `error` field of the
+  * same file. Stdout keeps its single JSON line.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // guide §9/§3 production default: allow shuffled hash join where
-      // its size conditions hold. At every bench SF this is a provable
-      // no-op (zero SortMergeJoins in any plan — all joins broadcast;
-      // plan hashes identical with/without, verified r22); past
-      // broadcast scale it lets the co-partitioned persisted self-joins
-      // (q22 band-sig, q24 sk) hash-join per partition with no sorts.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q23,q24 restricts to a subset — local iteration
     // aid; the driver leaves it unset and runs all. An element matches a
@@ -64,16 +54,20 @@ object Bench {
       }
     // noop sink: computes every column of every row, discards the
     // result (guide §1.4) — the timed work is the declared query, not
-    // a count()-pruned subset of it. SPARK_GRAFT_TIMED_ACTION=count
-    // restores the old action for A/B comparison against historical
-    // numbers (the driver leaves it unset → noop).
-    val countAction = sys.env.get("SPARK_GRAFT_TIMED_ACTION").contains("count")
+    // a count()-pruned subset of it
     def runOnce(df: DataFrame): Unit =
-      if (countAction) { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
+    // failure reasons per query, "; "-joined in phase order
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    def failed(name: String, phase: String, e: Throwable): Unit = {
+      val reason = s"${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $name $phase failed: $reason")
+      errors(name) = errors.get(name).fold("")(_ + "; ") + s"$phase: $reason"
+    }
     queries.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"warmup: $name")
-      try runOnce(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try runOnce(fn(spark, warmDir))
+      catch { case e: Throwable => failed(name, "warmup", e) }
       spark.catalog.clearCache() // drop per-query persists between runs
     }
     def timedRun(name: String,
@@ -81,7 +75,7 @@ object Bench {
       spark.sparkContext.setJobDescription(s"bench: $name")
       val t0 = System.nanoTime()
       val ok = try { runOnce(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+        catch { case e: Throwable => failed(name, "timed", e); false }
       // failed queries report -1.0, not their time-to-crash
       val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       spark.catalog.clearCache()
@@ -92,22 +86,16 @@ object Bench {
       System.gc()
       dt
     }
-    def md5hex(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    // r21 normalization, kept VERBATIM so untouched queries' hashes
-    // stay comparable round-over-round
-    def normalizeV1(plan: String): String =
+    // plan_hash_v2 normalization, kept VERBATIM so untouched queries'
+    // hashes stay comparable round-over-round: expression and plan ids
+    // (r21), plus the run-varying tokens that flipped q35/q40 between
+    // byte-identical runs — JVM lambda identifiers
+    // (ClassName$$Lambda$123/0x00007f...@4ac1b2c3) and object identity
+    // hashes (TopKByScore@713d2fe8) — and the sfDir path prefix (scan
+    // Location), so the hash is identical across runs AND across hosts
+    // with different data directories
+    def normalize(plan: String): String =
       plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
-    // r22 (plan_hash_v2): ALSO strip the run-varying tokens that
-    // flipped q35/q40 between byte-identical runs — JVM lambda
-    // identifiers (ClassName$$Lambda$123/0x00007f...@4ac1b2c3) and
-    // object identity hashes (TopKByScore@713d2fe8) — plus the sfDir
-    // path prefix (scan Location), so the v2 hash is identical across
-    // runs AND across hosts with different data directories
-    def normalizeV2(plan: String): String =
-      normalizeV1(plan)
         .replace(sfDir, "<SF_DIR>")
         .replaceAll("\\$\\$?Lambda[$/][^,\\s)\\]]*", "\\$\\$Lambda\\$x")
         // {1,16}: Integer.toHexString of an identity hash can be as
@@ -162,14 +150,13 @@ object Bench {
     // a finally so a failing query cannot leak cache entries into the
     // next query's planning.
     def planMeta(name: String, fn: (SparkSession, String) => DataFrame)
-        : Option[(String, String, Int, Int, Option[(Long, Long)])] =
+        : Option[(String, Int, Int, Option[(Long, Long)])] =
       try {
         val df = fn(spark, sfDir)
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val hash = md5hex(normalizeV1(plan))
-        val hashV2 = md5hex(normalizeV2(plan))
+        val hashV2 = graft.dedup.MinHashLocal.md5hex(normalize(plan))
         // counts from the one-line-per-operator tree (the formatted
         // string lists operators twice: tree + details)
         val tree = qe.executedPlan.toString
@@ -180,9 +167,9 @@ object Bench {
         val sb = try {
           runOnce(fn(spark, sfDir))
           shuffleBytes(name)
-        } catch { case _: Throwable => None }
-        Some((hash, hashV2, shuffles, bcasts, sb))
-      } catch { case _: Throwable => None }
+        } catch { case e: Throwable => failed(name, "shuffle-meta", e); None }
+        Some((hashV2, shuffles, bcasts, sb))
+      } catch { case e: Throwable => failed(name, "plan-meta", e); None }
       finally {
         try spark.catalog.clearCache() catch { case _: Throwable => () }
       }
@@ -201,24 +188,29 @@ object Bench {
       spark.sparkContext.setJobDescription(s"plan-meta: $name")
       name -> planMeta(name, fn)
     }
-    val metaJson = metas.map {
-      case (n, Some((h, h2, ex, bc, sb))) =>
+    val metaJson = metas.map { case (n, meta) =>
+      val planJson = meta.map { case (h2, ex, bc, sb) =>
         val sbJson = sb.map { case (b, r) =>
           s""","shuffle_bytes":$b,"shuffle_records":$r""" }.getOrElse("")
-        s""""$n":{"plan_hash":"$h","plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc$sbJson}"""
-      case (n, None) => s""""$n":null"""
+        s""""plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc$sbJson"""
+      }
+      val errJson = errors.get(n).map(e => s""""error":${Verify.jsonString(e)}""")
+      s""""$n":""" + (planJson ++ errJson).mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     try {
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(metaPath).toAbsolutePath.getParent)
       java.nio.file.Files.writeString(java.nio.file.Paths.get(metaPath), metaJson)
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] plan meta not written to $metaPath: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+    }
     metas.foreach {
-      case (n, Some((h, h2, ex, bc, sb))) =>
+      case (n, Some((h2, ex, bc, sb))) =>
         val sbTxt = sb.map { case (b, r) => s" shuffleBytes=$b records=$r" }
           .getOrElse("")
         System.err.println(
-          s"[plan] $n hash=$h v2=$h2 exchanges=$ex broadcasts=$bc$sbTxt")
+          s"[plan] $n v2=$h2 exchanges=$ex broadcasts=$bc$sbTxt")
       case (n, None) => System.err.println(s"[plan] $n hash=unavailable")
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

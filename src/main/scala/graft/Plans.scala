@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan dump tooling (optimization rounds): writes
@@ -16,20 +15,7 @@ object Plans {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "plans/r21"
     val suffix = if (args.length > 2) args(2) else "before"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // guide §9/§3 production default: allow shuffled hash join where
-      // its size conditions hold. At every bench SF this is a provable
-      // no-op (zero SortMergeJoins in any plan — all joins broadcast;
-      // plan hashes identical with/without, verified r22); past
-      // broadcast scale it lets the co-partitioned persisted self-joins
-      // (q22 band-sig, q24 sk) hash-join per partition with no sorts.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -38,7 +24,8 @@ object Plans {
         val txt = df.queryExecution.explainString(FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
       } catch { case e: Throwable =>
-        System.err.println(s"[plans] $name failed: ${e.getMessage}")
+        System.err.println(
+          s"[plans] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       spark.catalog.clearCache()
     }

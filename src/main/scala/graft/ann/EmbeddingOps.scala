@@ -1,10 +1,9 @@
 package graft.ann
 
-import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.dedup.MinHashLocal
+import graft.engine.SimilarityOps
+import graft.functions.VecExprs
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`Array[Float]`) — the
@@ -39,79 +38,45 @@ object EmbeddingOps {
   val PlanesPerTable = 4
   val Dims = 64
 
-  /** Long-form quantized embedding: `(vec_id, d, q)` with
-    * `q = round(x * 1e6)` as an exact long. */
-  def quantized(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("vec_id"), col("d").cast("long").as("d"),
-        round(col("x").cast("double") * QuantScale).cast("long").as("q"))
-
   /** Array-form quantized embedding: `(vec_id, qv: array<long>, n2)`
     * with `qv[d] = round(x_d * 1e6)` (identical per-element rounding
-    * to [[quantized]]) and `n2 = Σ qv[d]²` the exact squared norm.
-    * The vectors are dense (fixed [[Dims]]), so every long-form
-    * groupBy/join on `d` collapses to a row-local array fold: dot
+    * to the oracle's [[quantizedSql]]) and `n2 = Σ qv[d]²` the exact
+    * squared norm. The vectors are dense (fixed [[Dims]]), so every
+    * long-form groupBy/join on `d` collapses to a row-local array fold: dot
     * products and norms become zero-shuffle map work instead of a
     * 64×-row explode + hash aggregation. r22: the per-element
     * `transform(round(...))` HOF (CodegenFallback) became the native
     * codegen expression [[graft.functions.VecExprs.QuantizeVec]] —
     * same HALF_UP rounding, proven elementwise in OpsSpec. */
   def quantizedVec(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-      graft.functions.VecExprs.quantize_vec(col("embedding"), QuantScale)
-        .as("qv"))
-      .withColumn("n2", dotQ(col("qv"), col("qv")))
+    emb.select(col("vec_id"), VecExprs.quantize_vec(col("embedding"), QuantScale).as("qv"))
+      .withColumn("n2", VecExprs.dot_q(col("qv"), col("qv")))
 
-  /** Exact integer dot product of two long arrays (row-local fold —
-    * same summands, in index order, as the long-form join on `d`).
-    *
-    * r21 tried two forms: the spelled-out 64-term `getItem` sum blew
-    * the 64 KB codegen method limit (whole stage fell back to
-    * interpreted giant trees, 2-4x slower) and the
-    * `aggregate(zip_with(...))` HOF fold was allocation-light but
-    * CodegenFallback — interpreted per pair, breaking the surrounding
-    * WholeStageCodegen span. r22: a native codegen expression
-    * ([[graft.functions.VecExprs.DotQ]]) whose generated code calls
-    * one static flat-loop helper per row — identical null/length
-    * semantics to the HOF fold (OpsSpec proves both). */
-  def dotQ(a: Column, b: Column): Column =
-    graft.functions.VecExprs.dot_q(a, b)
-
-  /** Sign-LSH bucket keys from array-form vectors: one native codegen
-    * expression per row ([[graft.functions.VecExprs.BucketStrs]])
-    * computing all `4 * planesPerTable` exact integer projections in a
-    * flat loop — zero joins, zero aggregations, zero exchanges.
-    *
-    * History: r21 computed this via the long-form [[buckets]]
-    * join + two-level hash-aggregate pipeline (64× posexplode + plane
-    * join + two shuffles) after HOF folds and literal-weight expression
-    * trees both left codegen (CodegenFallback / 64 KB method blowup).
-    * The r22 native expression keeps codegen AND drops the pipeline:
-    * projections are integer sums (order-free), so buckets are
-    * bit-identical to the relational form (OpsSpec proves it row-wise,
-    * the q26/q41 oracle hashes corpus-wide). */
+  /** Sign-LSH bucket keys `(vec_id, tbl, bucket)`, one row per hash
+    * table; the bucket has one char per plane, '1' iff the integer
+    * projection onto [[planeWeight]] is non-negative. One native
+    * codegen expression per row ([[graft.functions.VecExprs.BucketStrs]])
+    * computes all `4 * planesPerTable` projections in a flat loop —
+    * zero joins, aggregations or exchanges. Projections are integer
+    * sums (order-free), so buckets are bit-identical to the oracle's
+    * relational [[bucketsSql]] (OpsSpec proves it row-wise, the q26/q41
+    * oracle hashes corpus-wide). Short buckets (default 4) suit ANN
+    * search; near-dup detection (cos ≈ 1) wants long ones, where
+    * random candidate pairs vanish exponentially. */
   def bucketsVec(vecs: DataFrame,
       planesPerTable: Int = PlanesPerTable): DataFrame =
     vecs.select(col("vec_id"),
-      posexplode(graft.functions.VecExprs.bucket_strs(col("qv"), planesPerTable))
+      posexplode(VecExprs.bucket_strs(col("qv"), planesPerTable))
         .as(Seq("tbl", "bucket")))
       .select(col("vec_id"), col("tbl").cast("long").as("tbl"), col("bucket"))
 
   /** Exact cosine top-k from array-form vectors `(vec_id, qv, n2)` for
     * candidate pairs `(i, j)`: same integer dot / norms / IEEE chain /
-    * tie-break as [[rankPairs]], but each pair costs one 64-element
-    * fold instead of 64 joined rows plus a hash aggregation. */
+    * tie-break as the oracle's [[rankPairsSql]], but each pair costs
+    * one 64-element fold instead of 64 joined rows plus a hash
+    * aggregation. */
   def rankPairsVec(vecs: DataFrame, pairs: DataFrame, k: Int): DataFrame =
-    rankSims(simsVec(vecs, pairs), k)
-
-  /** Rank unrounded `(i, j, cos)` per i: (cos desc, j asc), keep k —
-    * the shared ranking tail of the ANN queries. */
-  def rankSims(sims: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("i")).orderBy(desc("cos"), asc("j"))
-    sims.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("i"), col("j"), col("rn"), round(col("cos"), 6).as("cos"))
-  }
+    SimilarityOps.rankTopKRounded(simsVec(vecs, pairs), k)
 
   /** Unrounded exact cosine `(i, j, cos)` for candidate pairs over
     * array-form vectors. */
@@ -121,8 +86,8 @@ object EmbeddingOps {
         col("n2").as("n2i")), Seq("i"))
       .join(vecs.select(col("vec_id").as("j"), col("qv").as("vb"),
         col("n2").as("n2j")), Seq("j"))
-      .select(col("i"), col("j"), (dotQ(col("va"), col("vb")).cast("double") /
-        (sqrt(col("n2i").cast("double")) * sqrt(col("n2j").cast("double")))).as("cos"))
+      .select(col("i"), col("j"), SimilarityOps.cosine(
+        VecExprs.dot_q(col("va"), col("vb")), col("n2i"), col("n2j")).as("cos"))
 
   def quantizedSql: String =
     s"""SELECT vec_id, d, CAST(round(CAST(x AS DOUBLE) * $QuantScale) AS BIGINT) AS q
@@ -132,53 +97,13 @@ object EmbeddingOps {
   /** Integer hyperplane weight for (plane, dim): first hex digit of
     * `md5("plane<p>|<d>")` minus 8 → [-8, 7]. Identical to the oracle's
     * SQL derivation because md5 is md5. */
-  def planeWeight(p: Int, d: Int): Int = {
-    val md = MessageDigest.getInstance("MD5")
-    val hex = md.digest(s"plane$p|$d".getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    Integer.parseInt(hex.substring(0, 1), 16) - 8
-  }
+  def planeWeight(p: Int, d: Int): Int =
+    Integer.parseInt(MinHashLocal.md5hex(s"plane$p|$d").substring(0, 1), 16) - 8
 
   def planesSql(numPlanes: Int = NumPlanes): String =
     s"""SELECT p, d, instr('0123456789abcdef',
        |  substr(md5('plane' || CAST(p AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1, 1)) - 9 AS wt
        |FROM range($numPlanes) t(p), range($Dims) u(d)""".stripMargin
-
-  /** The (plane, dim) → weight relation, built driver-side (256 rows)
-    * and broadcast. */
-  def planes(spark: SparkSession, numPlanes: Int = NumPlanes): DataFrame = {
-    import spark.implicits._
-    (for (p <- 0 until numPlanes; d <- 0 until Dims)
-      yield (p.toLong, d.toLong, planeWeight(p, d).toLong))
-      .toDF("p", "d", "wt")
-  }
-
-  /** Sign-LSH bucket keys per vector, one row per hash table:
-    * `(vec_id, tbl, bucket)` where the bucket is one char per plane in
-    * the table ('1' iff the integer projection is non-negative).
-    *
-    * `planesPerTable` tunes precision vs recall: ANN search over
-    * moderate-cosine neighbors wants short buckets (default 4);
-    * near-dup detection (cos ≈ 1) wants long buckets — near-identical
-    * vectors still collide while random candidate pairs vanish
-    * exponentially. */
-  def buckets(spark: SparkSession, qv: DataFrame,
-      planesPerTable: Int = PlanesPerTable): DataFrame = {
-    val nPlanes = 4 * planesPerTable
-    val proj = qv.join(broadcast(planes(spark, nPlanes)), Seq("d"))
-      .groupBy("vec_id", "p")
-      .agg(sum(col("wt") * col("q")).as("proj"))
-      .select(col("vec_id"),
-        floor(col("p") / planesPerTable).cast("long").as("tbl"),
-        (col("p") % planesPerTable).as("slot"),
-        when(col("proj") >= 0, lit("1")).otherwise(lit("0")).as("bit"))
-    val slotCols = (0 until planesPerTable).map(i =>
-      max(when(col("slot") === i, col("bit"))).as(s"b$i"))
-    proj.groupBy("vec_id", "tbl")
-      .agg(slotCols.head, slotCols.tail: _*)
-      .select(col("vec_id"), col("tbl"),
-        concat((0 until planesPerTable).map(i => col(s"b$i")): _*).as("bucket"))
-  }
 
   def bucketsSql(qvRel: String,
       planesPerTable: Int = PlanesPerTable): String = {
@@ -190,26 +115,6 @@ object EmbeddingOps {
        |SELECT vec_id, p, CASE WHEN sum(wt * q) >= 0 THEN '1' ELSE '0' END AS bit
        |FROM $qvRel JOIN (${planesSql(nPlanes)}) w USING (d)
        |GROUP BY vec_id, p) GROUP BY vec_id, CAST(floor(p / $planesPerTable) AS BIGINT)""".stripMargin
-  }
-
-  /** Exact cosine top-k from quantized long form, for given candidate
-    * pairs `(i, j)`: integer dot + norms, ranked with deterministic
-    * tie-break. Returns `(i, j, rn, cos)`. */
-  def rankPairs(qv: DataFrame, pairs: DataFrame, k: Int): DataFrame = {
-    val norms = qv.groupBy("vec_id").agg(sum(col("q") * col("q")).as("n2"))
-    val dots = pairs
-      .join(qv.select(col("vec_id").as("i"), col("d"), col("q").as("qa")), Seq("i"))
-      .join(qv.select(col("vec_id").as("j"), col("d"), col("q").as("qb")), Seq("j", "d"))
-      .groupBy("i", "j").agg(sum(col("qa") * col("qb")).as("dot"))
-    val sims = dots
-      .join(norms.select(col("vec_id").as("i"), col("n2").as("n2i")), Seq("i"))
-      .join(norms.select(col("vec_id").as("j"), col("n2").as("n2j")), Seq("j"))
-      .select(col("i"), col("j"), (col("dot").cast("double") /
-        (sqrt(col("n2i").cast("double")) * sqrt(col("n2j").cast("double")))).as("cos"))
-    val w = Window.partitionBy(col("i")).orderBy(desc("cos"), asc("j"))
-    sims.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select(col("i"), col("j"), col("rn"), round(col("cos"), 6).as("cos"))
   }
 
   /** Oracle CTE tail shared by the ANN queries: `norms`, `dots` (from

@@ -213,14 +213,14 @@ object DedupOps {
     * codegen subexpression elimination), one exchange before the final
     * sort. */
   def simhashBits(toks: DataFrame): DataFrame = {
-    // loud guard (r22): this function was repurposed in r21 to take raw
-    // (doc_id, tok) OCCURRENCES. The old (doc_id, tok, tf) relation
-    // still type-checks but would vote once per distinct token instead
-    // of tf times — silently wrong fingerprints. Fail fast instead.
-    require(!toks.columns.contains("tf"),
-      "simhashBits expects raw (doc_id, tok) occurrences; a tf relation " +
-        "would vote once per distinct token instead of tf times — " +
-        "explode the occurrences instead of aggregating them first")
+    // loud guard: every row is one vote, so the input must be exactly
+    // the raw (doc_id, tok) OCCURRENCES. A (doc_id, tok, tf) relation
+    // would vote once per distinct token instead of tf times — silently
+    // wrong fingerprints — and any other extra column hints at the same
+    // kind of mix-up. Fail fast instead.
+    require(toks.columns.sorted.toSeq == Seq("doc_id", "tok"),
+      "simhashBits expects exactly the columns (doc_id, tok), one row per " +
+        s"token occurrence; got (${toks.columns.mkString(", ")})")
     val votes = (0 until 64).map { b =>
       val pos = b / 4 + 1
       val shift = 3 - b % 4

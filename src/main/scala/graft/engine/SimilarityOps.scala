@@ -54,19 +54,13 @@ object SimilarityOps {
   def docNorms(tf: DataFrame): DataFrame =
     tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
 
-  /** J1 + T3 — top-k cosine neighbors for every doc matching
-    * `queryPred`: inverted-index join on term, exact integer dot,
-    * ranking window with deterministic tie-break.
-    * Returns `(i, j, rn, cos)`. */
-  def cosineTopK(tf: DataFrame, queryPred: Column, k: Int): DataFrame =
-    cosineTopKFrom(tf.filter(queryPred), tf, k)
-
-  /** As [[cosineTopK]] but with an explicit query-side TF relation
-    * (e.g. a semi-joined single document for the online recommend
-    * path, where the tiny query side broadcasts). */
+  /** J1 + T3 — top-k cosine neighbors of every doc in the query-side
+    * TF relation (e.g. a semi-joined single document for the online
+    * recommend path, where the tiny query side broadcasts):
+    * inverted-index join on term, exact integer dot, ranking window
+    * with deterministic tie-break. Returns `(i, j, rn, cos)`. */
   def cosineTopKFrom(tfQueries: DataFrame, tf: DataFrame, k: Int): DataFrame =
-    rankTopK(cosinePairs(tfQueries, tf), k)
-      .select(col("i"), col("j"), col("rn"), round(col("cos"), 6).as("cos"))
+    rankTopKRounded(cosinePairs(tfQueries, tf), k)
 
   /** Exact cosine for every (query, corpus) doc pair sharing a term:
     * unrounded `(i, j, cos)`. Norms are per-doc self-norms, so the
@@ -88,9 +82,14 @@ object SimilarityOps {
     dots
       .join(docNorms(tfQueries).select(col("doc_id").as("i"), col("n2").as("n2i")), Seq("i"))
       .join(docNorms(tf).select(col("doc_id").as("j"), col("n2").as("n2j")), Seq("j"))
-      .select(col("i"), col("j"), (col("dot").cast("double") /
-        (sqrt(col("n2i").cast("double")) * sqrt(col("n2j").cast("double")))).as("cos"))
+      .select(col("i"), col("j"), cosine(col("dot"), col("n2i"), col("n2j")).as("cos"))
   }
+
+  /** Exact cosine from an exact integer dot product and the two exact
+    * squared norms: `dot / (sqrt(n2a) * sqrt(n2b))`, the fixed IEEE
+    * chain every cosine query and its oracle compute. */
+  def cosine(dot: Column, n2a: Column, n2b: Column): Column =
+    dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
   /** Rank `(i, j, cos)` pairs per i: (cos desc, j asc), keep k.
     * Returns unrounded `(i, j, rn, cos)`. */
@@ -100,6 +99,12 @@ object SimilarityOps {
       .filter(col("rn") <= k)
       .select("i", "j", "rn", "cos")
   }
+
+  /** [[rankTopK]] with `cos` rounded to 6 places — the output form of
+    * every cosine and ANN top-k query. */
+  def rankTopKRounded(sims: DataFrame, k: Int): DataFrame =
+    rankTopK(sims, k)
+      .select(col("i"), col("j"), col("rn"), round(col("cos"), 6).as("cos"))
 
   /** Incremental index maintenance: fold a batch of new documents into
     * an existing top-k neighbor table without a full rebuild. Sound

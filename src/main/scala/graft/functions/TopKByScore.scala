@@ -12,8 +12,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * aggregation buffer, combines map-side (partial aggregation), and
   * ships only k entries per group through the shuffle — at 100 TB the
   * difference is shuffling k rows per key instead of all of them.
-  * Ordering matches the engine's T3 rule: score descending, id
-  * ascending on ties.
+  * Ordering is the engine's T3 rule (score descending, id ascending on
+  * ties), applied by the same [[TopKBuffer]] the `graft_topk`
+  * aggregate uses; the buffer stays a `Seq` so its encoder, and with it
+  * q40's plan, is unchanged.
   *
   * Input rows are `(groupKey, id, score)`; the group key is handled by
   * `groupByKey` outside, the aggregator sees `(id, score)` pairs via
@@ -22,8 +24,11 @@ import org.apache.spark.sql.expressions.Aggregator
 class TopKByScore(k: Int)
     extends Aggregator[(Long, Long, Double), Seq[(Double, Long)], Seq[(Double, Long)]] {
 
-  private def trim(buf: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    buf.sortBy { case (score, id) => (-score, id) }.take(k)
+  private def trim(entries: Seq[(Double, Long)]): Seq[(Double, Long)] = {
+    val top = new TopKBuffer(k)
+    entries.foreach { case (score, id) => top.insert(score, id) }
+    top.entries
+  }
 
   override def zero: Seq[(Double, Long)] = Seq.empty
 
@@ -34,7 +39,8 @@ class TopKByScore(k: Int)
   override def merge(a: Seq[(Double, Long)],
       b: Seq[(Double, Long)]): Seq[(Double, Long)] = trim(a ++ b)
 
-  override def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = trim(buf)
+  // reduce and merge already keep the buffer trimmed and ordered
+  override def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = buf
 
   override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
     ExpressionEncoder()

@@ -39,6 +39,9 @@ final class TopKBuffer(val k: Int) {
       scores = ns; ids = ni
     }
   }
+
+  /** The kept (score, id) pairs, best first. */
+  def entries: Seq[(Double, Long)] = scores.indices.map(i => (scores(i), ids(i)))
 }
 
 /** T3 top-k as a native `TypedImperativeAggregate` (SURVEY.md §4 item

@@ -86,7 +86,7 @@ object VecExprs {
   }
 
   /** Per-planesPerTable weight matrix `[4 * ppt][Dims]`, derived from
-    * the same md5 scheme as the relational planes table
+    * the same md5 scheme as the oracle's planes table
     * ([[graft.ann.EmbeddingOps.planeWeight]]) and cached per ppt. */
   private val weightCache =
     new java.util.concurrent.ConcurrentHashMap[Int, Array[Array[Long]]]()

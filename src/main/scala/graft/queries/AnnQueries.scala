@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.ann.EmbeddingOps
-import graft.engine.{Q, Tables}
+import graft.engine.{Q, SimilarityOps, Tables}
+import graft.functions.VecExprs
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor suite over `embeddings`
@@ -27,11 +28,9 @@ object AnnQueries {
     val b = vecs.select(col("vec_id").as("j"), col("qv").as("vb"),
       col("n2").as("n2j"))
     val sims = b.crossJoin(broadcast(a)).filter(col("j") =!= col("i"))
-      .select(col("i"), col("j"),
-        (EmbeddingOps.dotQ(col("va"), col("vb")).cast("double") /
-          (sqrt(col("n2i").cast("double")) * sqrt(col("n2j").cast("double"))))
-          .as("cos"))
-    EmbeddingOps.rankSims(sims, 10).orderBy("i", "rn")
+      .select(col("i"), col("j"), SimilarityOps.cosine(
+        VecExprs.dot_q(col("va"), col("vb")), col("n2i"), col("n2j")).as("cos"))
+    SimilarityOps.rankTopKRounded(sims, 10).orderBy("i", "rn")
   }
 
   /** Sign-LSH bucketed ANN: 16 md5-derived integer hyperplanes in 4
@@ -47,7 +46,7 @@ object AnnQueries {
       |JOIN buckets b ON a.tbl = b.tbl AND a.bucket = b.bucket AND b.vec_id <> a.vec_id
       |WHERE a.vec_id < 50),
       |${EmbeddingOps.rankPairsSql(5)}""".stripMargin) { (s, dir) =>
-    // buckets via the codegen'd long-form pipeline, persisted so both
+    // buckets via the native bucket expression, persisted so both
     // sides of the candidate self-join share one computation; the
     // exact re-rank runs on array-form rows (one fold per pair)
     val vecs = EmbeddingOps.quantizedVec(Tables(s, dir, "embeddings"))
@@ -96,7 +95,7 @@ object AnnQueries {
         .select((col("vec_id") + 100000L).as("vec_id"),
           transform(col("qv"),
             (x, i) => when(i === 0, x + 10000L).otherwise(x)).as("qv"))
-        .withColumn("n2", EmbeddingOps.dotQ(col("qv"), col("qv"))))
+        .withColumn("n2", VecExprs.dot_q(col("qv"), col("qv"))))
     // 8 planes per table (vs 4 for ANN search): near-identical pairs
     // survive the longer bucket, random collisions drop ~16x; persist:
     // both candidate sides read it
@@ -143,10 +142,8 @@ object AnnQueries {
     val cent = vecs.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("cid"), col("qv").as("qc"), col("n2").as("nc"))
     val asims = vecs.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"),
-        (EmbeddingOps.dotQ(col("qv"), col("qc")).cast("double") /
-          (sqrt(col("n2").cast("double")) * sqrt(col("nc").cast("double"))))
-          .as("acos"))
+      .select(col("vec_id"), col("cid"), SimilarityOps.cosine(
+        VecExprs.dot_q(col("qv"), col("qc")), col("n2"), col("nc")).as("acos"))
     val w = Window.partitionBy(col("vec_id")).orderBy(desc("acos"), asc("cid"))
     val ranked = asims.withColumn("rk", row_number().over(w))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

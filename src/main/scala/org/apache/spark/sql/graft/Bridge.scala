@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -15,7 +17,13 @@ object Bridge {
 
   /** Deterministic listener-bus drain (`listenerBus` is
     * `private[spark]`): lets bench tooling read listener-accumulated
-    * metrics (per-query shuffle bytes) without racing the async bus. */
+    * metrics (per-query shuffle bytes) without racing the async bus.
+    * A drain that fails or times out leaves the metrics as counted so
+    * far; an interrupt is passed on to the caller's thread. */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
-    try sc.listenerBus.waitUntilEmpty() catch { case _: Throwable => () }
+    try sc.listenerBus.waitUntilEmpty()
+    catch {
+      case _: InterruptedException => Thread.currentThread().interrupt()
+      case NonFatal(_) => ()
+    }
 }

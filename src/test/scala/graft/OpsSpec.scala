@@ -47,11 +47,24 @@ class OpsSpec extends AnyFunSuite {
     assert(j.getDouble(5) == 2.0 / 4.0)
   }
 
+  test("simhashBits rejects a (doc_id, tok, tf) relation") {
+    val tf = SimilarityOps.termFreq(docs(1L -> "aa bb aa"), dropStopwords = false)
+    val e = intercept[IllegalArgumentException](DedupOps.simhashBits(tf))
+    assert(e.getMessage.contains("exactly the columns (doc_id, tok)"))
+  }
+
+  test("simhashBits rejects an occurrence relation with an extra column") {
+    val occ = docs(1L -> "aa bb aa").select(col("doc_id"),
+      posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
+    val e = intercept[IllegalArgumentException](DedupOps.simhashBits(occ))
+    assert(e.getMessage.contains("exactly the columns (doc_id, tok)"))
+  }
+
   test("cosine: identical docs rank each other first with cos 1.0") {
     val tf = SimilarityOps.termFreq(docs(
       1L -> "alpha beta beta gamma", 2L -> "alpha beta beta gamma",
       3L -> "delta epsilon zeta"), dropStopwords = false)
-    val top = SimilarityOps.cosineTopK(tf, col("doc_id") < 10, 5)
+    val top = SimilarityOps.cosineTopKFrom(tf.filter(col("doc_id") < 10), tf, 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(top.contains((1L, 2L, 1.0)))
     assert(top.contains((2L, 1L, 1.0)))
@@ -66,9 +79,9 @@ class OpsSpec extends AnyFunSuite {
       (1L, Array.tabulate(64)(i => (math.sin(i + 1) * 1.001f).toFloat)), // near-dup of 0
       (2L, Array.tabulate(64)(i => math.cos(3 * i + 2).toFloat)))
       .toDF("vec_id", "embedding")
-    val qv = EmbeddingOps.quantized(emb)
+    val vecs = EmbeddingOps.quantizedVec(emb)
     val cand = Seq((0L, 1L), (0L, 2L)).toDF("i", "j")
-    val ranked = EmbeddingOps.rankPairs(qv, cand, 2).collect()
+    val ranked = EmbeddingOps.rankPairsVec(vecs, cand, 2).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(ranked.head._1 == 1L && ranked.head._2 == 1L)
     assert(ranked.find(_._1 == 1L).get._3 > 0.999)
@@ -136,14 +149,20 @@ class OpsSpec extends AnyFunSuite {
       (v.toLong, Array.tabulate(64)(i => math.sin(v * 17 + i * 0.9).toFloat)))
       .toDF("vec_id", "embedding")
     val vecs = EmbeddingOps.quantizedVec(emb)
+    val qvs = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
     for (ppt <- Seq(4, 8)) {
       val native = EmbeddingOps.bucketsVec(vecs, ppt).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-      val longForm = EmbeddingOps.buckets(spark,
-        vecs.select(col("vec_id"), posexplode(col("qv")).as(Seq("d", "q")))
-          .select(col("vec_id"), col("d").cast("long").as("d"), col("q")),
-        ppt).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+      // the long-form pipeline (bucketsSql) in plain Scala: per plane
+      // the exact integer projection, '1' iff >= 0, concatenated per
+      // table of `ppt` planes
+      val wt = Array.tabulate(4 * ppt, EmbeddingOps.Dims)(EmbeddingOps.planeWeight)
+      val longForm = (for ((id, qv) <- qvs; t <- 0 until 4) yield {
+        val bits = (t * ppt until (t + 1) * ppt).map { p =>
+          if (qv.indices.map(d => wt(p)(d) * qv(d)).sum >= 0) '1' else '0'
+        }
+        (id, t.toLong, bits.mkString)
+      }).toSet
       assert(native == longForm, s"ppt=$ppt")
       assert(native.size == 40 * 4)
     }

@@ -109,4 +109,23 @@ class StreamingSpec extends AnyFunSuite {
     q.stop()
     assert(n > 0)
   }
+
+  test("stream-static join enriches live events with a batch dimension") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val static = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
+    val src = MemoryStream[Event]
+    val q = StreamingOps.enrichWithStatic(src.toDF(), static, "user_id")
+      .writeStream.format("memory").queryName("enriched")
+      .outputMode("append").start()
+    src.addData(
+      Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1, "c", 1.0),
+      Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 3, "c", 2.0))
+    q.processAllAvailable()
+    val rows = spark.table("enriched").select("event_id", "tier")
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    q.stop()
+    assert(rows(1L).contains("gold"))
+    assert(rows(2L).isEmpty) // left join keeps unmatched stream rows
+  }
 }

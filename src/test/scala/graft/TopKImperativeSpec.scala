@@ -1,32 +1,81 @@
 package graft
 
-import graft.functions.{TopKBuffer, TopKScoreId}
+import graft.functions.{TopKBuffer, TopKByScore, TopKScoreId}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** TopKBuffer edge cases + the graft_topk aggregate through the
-  * expression layer. */
+/** TopKBuffer edge cases, plus both top-k aggregates — the typed
+  * TopKByScore and the graft_topk expression — against the ranking
+  * window they replace. */
 class TopKImperativeSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
 
-  private def drain(b: TopKBuffer): Seq[(Double, Long)] =
-    b.scores.indices.map(i => (b.scores(i), b.ids(i)))
+  /** Per group `g`, the (score, id) list `row_number()` over (score
+    * desc, id asc) keeps; asserts TopKByScore and graft_topk keep the
+    * same lists. */
+  private def assertAgree(rows: Seq[(Long, Long, Double)], k: Int)
+      : Map[Long, Seq[(Double, Long)]] = {
+    import spark.implicits._
+    val df = rows.toDF("g", "id", "score")
+    val w = Window.partitionBy("g").orderBy(desc("score"), asc("id"))
+    val window = df.withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k).collect().toSeq
+      .groupBy(_.getLong(0)).view.mapValues(_.sortBy(_.getInt(3))
+        .map(r => (r.getDouble(2), r.getLong(1)))).toMap
+    val typed = df.as[(Long, Long, Double)].groupByKey(_._1)
+      .agg(new TopKByScore(k).toColumn.name("top")).collect().toMap
+    val native = df.groupBy("g")
+      .agg(TopKScoreId.graft_topk(col("score"), col("id"), k).as("top"))
+      .collect().map(r => r.getLong(0) ->
+        r.getSeq[Row](1).map(e => (e.getDouble(0), e.getLong(1)))).toMap
+    assert(typed == window, "TopKByScore vs row_number()")
+    assert(native == window, "graft_topk vs row_number()")
+    window
+  }
+
+  test("typed and native top-k agree with row_number() on equal scores") {
+    val rows = Seq((1L, 5L, 2.0), (1L, 3L, 2.0), (1L, 9L, 2.0),
+      (1L, 1L, 1.0), (1L, 4L, 2.0), (2L, 8L, 0.5), (2L, 7L, 0.5),
+      (2L, 6L, 0.5), (2L, 2L, 0.25))
+    val top = assertAgree(rows, 3)
+    assert(top(1L) == Seq((2.0, 3L), (2.0, 4L), (2.0, 5L)))
+    assert(top(2L) == Seq((0.5, 6L), (0.5, 7L), (0.5, 8L)))
+  }
+
+  test("typed and native top-k agree with row_number() on groups smaller than k") {
+    val rows = Seq((1L, 10L, 3.0), (1L, 11L, 4.0), (2L, 20L, 1.0),
+      (3L, 30L, 2.0), (3L, 31L, 2.0), (3L, 32L, 5.0))
+    val top = assertAgree(rows, 5)
+    assert(top(1L) == Seq((4.0, 11L), (3.0, 10L)))
+    assert(top(2L) == Seq((1.0, 20L)))
+    assert(top(3L) == Seq((5.0, 32L), (2.0, 30L), (2.0, 31L)))
+  }
+
+  test("typed and native top-k agree with row_number() at k = 1") {
+    val rows = Seq((1L, 4L, 9.0), (1L, 2L, 9.0), (1L, 1L, 8.0),
+      (2L, 7L, -1.0), (2L, 6L, -2.0), (3L, 5L, 0.0))
+    val top = assertAgree(rows, 1)
+    assert(top == Map(1L -> Seq((9.0, 2L)), 2L -> Seq((-1.0, 7L)),
+      3L -> Seq((0.0, 5L))))
+  }
 
   test("buffer keeps k best with (score desc, id asc) ties") {
     val b = new TopKBuffer(3)
     Seq((1.0, 5L), (3.0, 2L), (3.0, 1L), (2.0, 9L), (0.5, 7L))
       .foreach { case (s, i) => b.insert(s, i) }
-    assert(drain(b) == Seq((3.0, 1L), (3.0, 2L), (2.0, 9L)))
+    assert(b.entries == Seq((3.0, 1L), (3.0, 2L), (2.0, 9L)))
   }
 
   test("rejects worse-than-last when full; accepts equal score smaller id") {
     val b = new TopKBuffer(2)
     b.insert(5.0, 10L); b.insert(4.0, 20L)
     b.insert(3.0, 1L) // worse, rejected
-    assert(drain(b) == Seq((5.0, 10L), (4.0, 20L)))
+    assert(b.entries == Seq((5.0, 10L), (4.0, 20L)))
     b.insert(4.0, 5L) // tie with last, smaller id wins
-    assert(drain(b) == Seq((5.0, 10L), (4.0, 5L)))
+    assert(b.entries == Seq((5.0, 10L), (4.0, 5L)))
   }
 
   test("merge equals bulk insert") {
@@ -37,7 +86,7 @@ class TopKImperativeSpec extends AnyFunSuite {
     ys.foreach { case (s, i) => b.insert(s, i); ref.insert(s, i) }
     var i = 0
     while (i < b.scores.length) { a.insert(b.scores(i), b.ids(i)); i += 1 }
-    assert(drain(a) == drain(ref))
+    assert(a.entries == ref.entries)
   }
 
   test("aggregate ignores null scores/ids and handles k > group size") {
