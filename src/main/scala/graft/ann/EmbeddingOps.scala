@@ -46,7 +46,7 @@ object EmbeddingOps {
     * products and norms become zero-shuffle map work instead of a
     * 64×-row explode + hash aggregation. r22: the per-element
     * `transform(round(...))` HOF (CodegenFallback) became the native
-    * codegen expression [[graft.functions.VecExprs.QuantizeVec]] —
+    * codegen column [[graft.functions.VecExprs.quantize_vec]] —
     * same HALF_UP rounding, proven elementwise in OpsSpec. */
   def quantizedVec(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), VecExprs.quantize_vec(col("embedding"), QuantScale).as("qv"))
@@ -55,7 +55,7 @@ object EmbeddingOps {
   /** Sign-LSH bucket keys `(vec_id, tbl, bucket)`, one row per hash
     * table; the bucket has one char per plane, '1' iff the integer
     * projection onto [[planeWeight]] is non-negative. One native
-    * codegen expression per row ([[graft.functions.VecExprs.BucketStrs]])
+    * codegen call per row ([[graft.functions.VecExprs.bucket_strs]])
     * computes all `4 * planesPerTable` projections in a flat loop —
     * zero joins, aggregations or exchanges. Projections are integer
     * sums (order-free), so buckets are bit-identical to the oracle's

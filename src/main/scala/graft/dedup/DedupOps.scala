@@ -38,7 +38,7 @@ object DedupOps {
     shinglesRaw(docs).distinct()
 
   /** As [[shingles]] but WITHOUT the per-doc distinct — callers that
-    * re-key the shingle (e.g. [[shingleKeys]]) dedup on the smaller
+    * re-key the shingle (e.g. [[shingleKeysRaw]]) dedup on the smaller
     * key instead of paying a string-payload shuffle here. */
   def shinglesRaw(docs: DataFrame): DataFrame = {
     val n3 = greatest(size(col("toks")) - 2, lit(0))
@@ -51,23 +51,20 @@ object DedupOps {
         concat_ws(" ", col("g.t0"), col("g.t1"), col("g.t2")).as("shingle"))
   }
 
-  /** Distinct 60-bit shingle keys per doc: `(doc_id, sk: long)` where
-    * `sk = conv(substr(md5(shingle), 1, 15), 16, 10)`. The 15-hex→long
-    * conversion is injective, so Spark joining/grouping on the LONG
-    * has IDENTICAL equality classes to the oracle grouping on the
-    * 15-char md5 prefix STRING — any 60-bit collision collides in both
-    * engines the same way, keeping the comparison exact. Longs cut the
-    * inverted-index join's shuffle payload and hashing cost ~3× vs raw
-    * shingle strings (the q24 r2 regression was allocation pressure in
-    * exactly that string-keyed stretch). */
-  def shingleKeys(docs: DataFrame): DataFrame =
-    shingleKeysRaw(docs).distinct()
-
-  /** As [[shingleKeys]] but WITHOUT the distinct — callers that
-    * re-partition by `sk` first (q24) get the distinct, and any
-    * downstream sk-keyed join, for free on that one exchange.
+  /** 60-bit shingle keys per doc, NOT distinct: `(doc_id, sk: long)`
+    * where `sk = conv(substr(md5(shingle), 1, 15), 16, 10)`. The
+    * 15-hex→long conversion is injective, so Spark joining/grouping on
+    * the LONG has IDENTICAL equality classes to the oracle grouping on
+    * the 15-char md5 prefix STRING ([[shingleKeysSql]]) — any 60-bit
+    * collision collides in both engines the same way, keeping the
+    * comparison exact. Longs cut the inverted-index join's shuffle
+    * payload and hashing cost ~3× vs raw shingle strings (the q24 r2
+    * regression was allocation pressure in exactly that string-keyed
+    * stretch). Callers that re-partition by `sk` first (q24) get the
+    * distinct, and any downstream sk-keyed join, for free on that one
+    * exchange.
     * r22: the key derivation is the native
-    * [[graft.functions.MinHashExprs.ShingleSk]] expression — identical
+    * [[graft.functions.MinHashExprs.shingle_sk]] column — identical
     * values to `conv(substr(md5(shingle), 1, 15), 16, 10) :: long`
     * (OpsSpec pins it), one thread-local digest per shingle instead of
     * builtin md5's per-call getInstance + hex string + conv parse. */
@@ -76,9 +73,10 @@ object DedupOps {
       .select(col("doc_id"),
         graft.functions.MinHashExprs.shingle_sk(col("shingle")).as("sk"))
 
-  /** Oracle rendering of [[shingleKeys]] over a shingle relation —
-    * DuckDB keeps the string prefix as the key (no 64-bit hex→int cast
-    * needed): equality classes match the Spark longs exactly. */
+  /** Oracle rendering of the distinct [[shingleKeysRaw]] over a
+    * shingle relation — DuckDB keeps the string prefix as the key (no
+    * 64-bit hex→int cast needed): equality classes match the Spark
+    * longs exactly. */
   def shingleKeysSql(shinglesRel: String): String =
     s"SELECT DISTINCT doc_id, substr(md5(shingle), 1, 15) AS sk FROM $shinglesRel"
 

@@ -9,8 +9,8 @@ import graft.engine.TextOps
   * (tokenize → word 3-gram shingles → per-seed min of
   * md5("h|shingle") → per-band md5 of concatenated minhashes) as pure
   * Scala, byte-identical to the DataFrame pipeline in [[DedupOps]]
-  * (proven by StreamingDedupSpec). Used by the native Catalyst
-  * expressions (`graft.functions.MinHashSigs` / `BandSigs`) and the
+  * (proven by StreamingDedupSpec). Used by the native columns
+  * (`graft.functions.MinHashExprs.minhash_sigs` / `band_sigs`) and the
   * streaming dedup operator: signing needs no shuffle at all — the
   * whole corpus is signed map-side and only bucket joins shuffle.
   */
@@ -27,15 +27,7 @@ object MinHashLocal {
   def md5hex(s: String): String = {
     val md = digests.get()
     md.reset()
-    val bytes = md.digest(s.getBytes(StandardCharsets.UTF_8))
-    val out = new Array[Char](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = HexChars((bytes(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexChars(bytes(i) & 0xf)
-      i += 1
-    }
-    new String(out)
+    hexOf(md.digest(s.getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Distinct word 3-gram shingles; empty for null docs or docs under

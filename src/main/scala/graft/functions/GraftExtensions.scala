@@ -1,37 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 
-/** SparkSessionExtensions registration for the engine's native
-  * functions, so SQL users get them too:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  *   ...
-  * spark.sql("SELECT graft_stem(name) FROM products")
-  * }}}
-  *
-  * [[install]] registers the same functions on an already-running
-  * session (the driver contract hands us one, so the config-based
-  * route isn't always available).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
-    e.injectFunction(GraftExtensions.stemDescriptor)
-}
-
+/** SQL registration of the engine's native functions on an
+  * already-built session, so SQL users get them too:
+  * `spark.sql("SELECT graft_stem(name) FROM products")`. */
 object GraftExtensions {
-
-  private val stemDescriptor = (
-    FunctionIdentifier("graft_stem"),
-    new ExpressionInfo(classOf[StemText].getName, "graft_stem"),
-    (children: Seq[Expression]) => StemText(children.head))
 
   /** Register the engine functions on an existing session. */
   def install(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stem", exprs => StemText(exprs.head), "scala_udf")
+      "graft_stem",
+      exprs => Bridge.expression(StemText.graft_stem(Bridge.column(exprs.head))),
+      "scala_udf")
 }

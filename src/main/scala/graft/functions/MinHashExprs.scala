@@ -2,73 +2,40 @@ package graft.functions
 
 import graft.dedup.MinHashLocal
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native expressions for row-local MinHash signing (see
+/** Native columns for row-local MinHash signing (see
   * [[graft.dedup.MinHashLocal]]): the whole shingle→minhash→band
-  * pipeline becomes one map-side expression call per document —
+  * pipeline becomes one map-side static call per document —
   * no explode, no per-doc window, no signature groupBy. The dedup
   * queries shuffle only at the bucket join. */
 object MinHashExprs {
 
-  def toArrayData(xs: Array[String]): ArrayData =
+  private def toArrayData(xs: Array[String]): ArrayData =
     new GenericArrayData(xs.map(UTF8String.fromString(_)).toArray[Any])
 
-  /** `minhash_sigs(text)` → array of the 16 minhashes (seed order). */
-  case class MinHashSigs(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType)
-    override def prettyName: String = "graft_minhash_sigs"
-    override def nullSafeEval(v: Any): Any =
-      toArrayData(MinHashLocal.minhashes(v.asInstanceOf[UTF8String].toString))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.MinHashExprs.toArrayData(" +
-          s"graft.dedup.MinHashLocal.minhashes($c.toString()))")
-    override protected def withNewChildInternal(c: Expression): MinHashSigs =
-      copy(child = c)
-  }
+  def minhashes(text: UTF8String): ArrayData =
+    toArrayData(MinHashLocal.minhashes(text.toString))
 
-  /** `band_sigs(text)` → array of the 4 LSH band signatures. */
-  case class BandSigs(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType)
-    override def prettyName: String = "graft_band_sigs"
-    override def nullSafeEval(v: Any): Any =
-      toArrayData(MinHashLocal.bandSigs(v.asInstanceOf[UTF8String].toString))
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.MinHashExprs.toArrayData(" +
-          s"graft.dedup.MinHashLocal.bandSigs($c.toString()))")
-    override protected def withNewChildInternal(c: Expression): BandSigs =
-      copy(child = c)
-  }
+  def bandSigs(text: UTF8String): ArrayData =
+    toArrayData(MinHashLocal.bandSigs(text.toString))
+
+  def sk60(shingle: UTF8String): Long = MinHashLocal.sk60(shingle.getBytes)
+
+  /** `minhash_sigs(text)` → array of the 16 minhashes (seed order). */
+  def minhash_sigs(c: Column): Column =
+    staticCall(this, ArrayType(StringType), "minhashes", Seq(c))
 
   /** `shingle_sk(shingle)` → 60-bit md5-prefix long (see
     * [[graft.dedup.MinHashLocal.sk60]]) — the native form of
     * `conv(substr(md5(shingle), 1, 15), 16, 10) :: long`, one digest
     * call per shingle with no hex-string round-trip. */
-  case class ShingleSk(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def prettyName: String = "graft_shingle_sk"
-    override def nullSafeEval(v: Any): Any =
-      MinHashLocal.sk60(v.asInstanceOf[UTF8String].getBytes)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.dedup.MinHashLocal.sk60($c.getBytes())")
-    override protected def withNewChildInternal(c: Expression): ShingleSk =
-      copy(child = c)
-  }
-
-  def minhash_sigs(c: Column): Column =
-    Bridge.column(MinHashSigs(Bridge.expression(c)))
-
   def shingle_sk(c: Column): Column =
-    Bridge.column(ShingleSk(Bridge.expression(c)))
+    staticCall(this, LongType, "sk60", Seq(c))
 
+  /** `band_sigs(text)` → array of the 4 LSH band signatures. */
   def band_sigs(c: Column): Column =
-    Bridge.column(BandSigs(Bridge.expression(c)))
+    staticCall(this, ArrayType(StringType), "bandSigs", Seq(c))
 }

@@ -2,41 +2,25 @@ package graft.functions
 
 import graft.engine.Stemmer
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for Porter-stemming a whitespace-
-  * separated string — the codegen upgrade path for the stemmer UDF
-  * (SURVEY.md §2.11, §7.3: "optional codegen Expression later").
+/** Porter-stemming of a whitespace-separated string as a native
+  * codegen'd column — the codegen upgrade path for the stemmer UDF
+  * (SURVEY.md §2.11, §7.3).
   *
   * Unlike the `udf()` wrapper, this generates a single static call
   * inside whole-stage codegen: no Scala-function SerDe, no
-  * null-boxing, and the expression participates in constant folding
-  * when the input is a literal. The stemming itself
-  * (`graft.engine.Stemmer`) is shared with the UDF path.
+  * null-boxing, and the call participates in constant folding when the
+  * input is a literal. The stemming itself (`graft.engine.Stemmer`) is
+  * shared with the UDF path.
   */
-case class StemText(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_stem"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(Stemmer.stemText(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.engine.Stemmer.stemText($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): StemText =
-    copy(child = newChild)
-}
-
 object StemText {
+
+  def stemText(text: UTF8String): UTF8String =
+    UTF8String.fromString(Stemmer.stemText(text.toString))
+
   /** Column API: `graft_stem($"text")`. */
   def graft_stem(c: Column): Column =
-    Bridge.column(StemText(Bridge.expression(c)))
+    staticCall(this, StringType, "stemText", Seq(c))
 }

@@ -3,14 +3,12 @@ package graft.functions
 import java.math.RoundingMode
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native whole-stage-codegen expressions for the array-form ANN
+/** Native whole-stage-codegen columns for the array-form ANN
   * operators (see [[graft.ann.EmbeddingOps]]).
   *
   * Why these exist (r22, guide "per-task work"): the r21 array form
@@ -19,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * CodegenFallback — every call is interpreted, allocates a lambda
   * frame per element, and breaks the surrounding WholeStageCodegen
   * span. The spelled-out 64-term `getItem` trees (r21's other attempt)
-  * blew the 64 KB codegen method limit. A custom expression whose
-  * generated code calls ONE static helper per row keeps the stage
-  * fully codegen'd with a flat primitive loop inside — the same
-  * pattern as [[MinHashExprs]].
+  * blew the 64 KB codegen method limit. A `StaticInvoke` of ONE
+  * static helper per row ([[staticCall]]) keeps the stage fully
+  * codegen'd with a flat primitive loop inside — the same pattern as
+  * [[MinHashExprs]].
   *
   * Result identity: every helper reproduces the HOF / long-form
   * semantics exactly — integer sums in index order, Spark `round`
@@ -142,72 +140,16 @@ object VecExprs {
   }
 
   /** `dot_q(a, b)` → exact integer dot product (nullable long). */
-  case class DotQ(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_dot_q"
-    override def nullSafeEval(a: Any, b: Any): Any =
-      dotBoxed(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val boxed = ctx.freshName("dot")
-        s"""
-           |java.lang.Long $boxed = graft.functions.VecExprs.dotBoxed($a, $b);
-           |if ($boxed == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = $boxed.longValue(); }
-         """.stripMargin
-      })
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): DotQ = copy(left = l, right = r)
-  }
+  def dot_q(a: Column, b: Column): Column =
+    staticCall(this, LongType, "dotBoxed", Seq(a, b), returnNullable = true)
 
   /** `quantize_vec(embedding, scale)` → array<long>. */
-  case class QuantizeVec(child: Expression, scale: Double)
-      extends UnaryExpression {
-    override def dataType: DataType = child.dataType match {
-      case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
-      case _ => ArrayType(LongType)
-    }
-    override def prettyName: String = "graft_quantize_vec"
-    override def nullSafeEval(v: Any): Any =
-      quantize(v.asInstanceOf[ArrayData], scale)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.VecExprs.quantize($c, $scale)")
-    override protected def withNewChildInternal(c: Expression): QuantizeVec =
-      copy(child = c)
-  }
+  def quantize_vec(c: Column, scale: Double): Column =
+    staticCall(this, ArrayType(LongType), "quantize", Seq(c, lit(scale)))
 
   /** `bucket_strs(qv, ppt)` → array<string> of the 4 table buckets
     * (null for empty input arrays — no bucket rows after posexplode). */
-  case class BucketStrs(child: Expression, planesPerTable: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_bucket_strs"
-    override def nullSafeEval(v: Any): Any =
-      bucketStrs(v.asInstanceOf[ArrayData], planesPerTable)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val arr = ctx.freshName("buckets")
-        s"""
-           |org.apache.spark.sql.catalyst.util.ArrayData $arr =
-           |  graft.functions.VecExprs.bucketStrs($c, $planesPerTable);
-           |if ($arr == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = $arr; }
-         """.stripMargin
-      })
-    override protected def withNewChildInternal(c: Expression): BucketStrs =
-      copy(child = c)
-  }
-
-  def dot_q(a: Column, b: Column): Column =
-    Bridge.column(DotQ(Bridge.expression(a), Bridge.expression(b)))
-
-  def quantize_vec(c: Column, scale: Double): Column =
-    Bridge.column(QuantizeVec(Bridge.expression(c), scale))
-
   def bucket_strs(c: Column, planesPerTable: Int): Column =
-    Bridge.column(BucketStrs(Bridge.expression(c), planesPerTable))
+    staticCall(this, ArrayType(StringType, containsNull = false),
+      "bucketStrs", Seq(c, lit(planesPerTable)), returnNullable = true)
 }

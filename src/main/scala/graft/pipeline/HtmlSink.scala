@@ -34,11 +34,4 @@ object HtmlSink {
        |<body><h1>${esc(title)}</h1>
        |${tableHtml(recommendations, k)}
        |</body></html>""".stripMargin
-
-  /** Write a report to a file (the reference then opens a browser —
-    * out of scope for a library). */
-  def writeReport(path: String, title: String, recommendations: DataFrame,
-      k: Int = 5): Unit =
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      reportHtml(title, recommendations, k))
 }

@@ -27,8 +27,8 @@ object DedupQueries {
   }
 
   /** MinHash signatures (16 seeds) over word-3-gram shingles. The
-    * Spark side signs row-locally via the native MinHashSigs
-    * expression (zero shuffles before the ORDER BY); the oracle keeps
+    * Spark side signs row-locally via the native `minhash_sigs`
+    * column (zero shuffles before the ORDER BY); the oracle keeps
     * the relational CTE form — identical md5 scheme, identical
     * output. */
   val q21 = Q("q21_minhash",
@@ -66,7 +66,7 @@ object DedupQueries {
       |FROM inter JOIN cnt na ON na.doc_id = i JOIN cnt nb ON nb.doc_id = j
       |WHERE CAST(inter AS DOUBLE) / CAST(na.n + nb.n - inter AS DOUBLE) >= 0.5
       |ORDER BY i, j""".stripMargin) { (s, dir) =>
-    // sign row-locally (native BandSigs expression — no shuffle),
+    // sign row-locally (native `band_sigs` column — no shuffle),
     // bucket-join for candidates, then build shingle sets ONLY for
     // candidate docs: the full corpus never pays the explode+window
     // shingle pipeline, just one map-side signing pass
@@ -92,7 +92,7 @@ object DedupQueries {
     val candIds = cand.select(col("i").as("doc_id"))
       .unionByName(cand.select(col("j").as("doc_id"))).distinct()
     // verification joins on 60-bit md5-prefix longs, not shingle
-    // strings — identical equality classes (see DedupOps.shingleKeys),
+    // strings — identical equality classes (see DedupOps.shingleKeysRaw),
     // a fraction of the shuffle bytes; the doc_id repartition feeds the
     // (doc_id, sk) distinct AND the per-doc counts aggregation off one
     // exchange
@@ -144,7 +144,7 @@ object DedupQueries {
       |WHERE CAST(inter AS DOUBLE) / CAST(na.n + nb.n - inter AS DOUBLE) >= 0.2
       |ORDER BY i, j""".stripMargin) { (s, dir) =>
     // the inverted index is keyed by 60-bit md5-prefix longs, not
-    // shingle strings: identical equality classes (DedupOps.shingleKeys)
+    // shingle strings: identical equality classes (DedupOps.shingleKeysRaw)
     // and ~3× less shuffle/allocation in the df²-heavy self-join — the
     // exact stretch that regressed under allocation pressure in r2
     // ONE exchange establishes the sk partitioning that the distinct

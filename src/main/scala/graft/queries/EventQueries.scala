@@ -11,26 +11,14 @@ import org.apache.spark.sql.functions._
   */
 object EventQueries {
 
-  /** `events.ts` is nanosecond parquet. Older Sparks reject it in the
-    * vectorized reader, so we read nanos as long (legacy conf) and
-    * convert to microsecond TIMESTAMP_NTZ (`ts div 1000` — exact
-    * integer division; the data carries no sub-microsecond digits).
-    * Spark 4.1+ drops that conf and instead reads parquet NANOS
-    * natively as a microsecond-truncated TIMESTAMP_NTZ — identical
-    * values — so branch on the resolved schema. The oracle casts the
-    * same column to microsecond TIMESTAMP, so both engines agree. */
-  def events(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-      case _ => raw // already µs-truncated TIMESTAMP_NTZ (Spark 4.1+)
-    }
-  }
+  /** `events.ts` is microsecond parquet without a time zone
+    * (`isAdjustedToUTC = false`), which Spark reads as TIMESTAMP_NTZ.
+    * The oracle casts the same column to TIMESTAMP, so both engines
+    * see the same wall-clock values. */
+  def events(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables(s, dir, "events")
 
-  /** The events relation as seen by the DuckDB oracle (ns → µs). */
+  /** The events relation as seen by the DuckDB oracle (µs TIMESTAMP). */
   private val evSql = "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) ev"
 
   /** Tumbling 1-hour event-time window per event type. Value sums are
@@ -105,10 +93,8 @@ object EventQueries {
     """SELECT k_bucket, count(*) AS n, min(event_id) AS first_event
       |FROM (SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) % 10 AS k_bucket FROM events)
       |GROUP BY k_bucket ORDER BY k_bucket""".stripMargin) { (s, dir) =>
-    // events() (not Tables): the raw table is nanosecond parquet and
-    // needs the ts handling even though this query ignores ts (a
-    // spread was tried and reverted — the JSON parse of this table is
-    // cheaper than the exchange)
+    // no spread: one was tried and reverted — the JSON parse of this
+    // table is cheaper than the exchange
     events(s, dir)
       .select(col("event_id"),
         (get_json_object(col("props"), "$.k").cast("long") % 10).as("k_bucket"))

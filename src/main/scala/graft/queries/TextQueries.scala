@@ -26,7 +26,7 @@ object TextQueries {
   }
 
   /** P5+P6 — normalized + Porter-stemmed `search_terms`
-    * (`amazon1.py:128-130`) via the native codegen expression
+    * (`amazon1.py:128-130`) via the native codegen column
     * (graft.functions.StemText). Stemming has no SQL equivalent →
     * rows-only check (SparkEntry contract); exactness is covered by
     * `StemmerSpec`/`StemTextSpec`. */

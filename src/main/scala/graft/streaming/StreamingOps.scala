@@ -19,12 +19,12 @@ object StreamingOps {
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  /** Schema for file-based streaming reads of the events table
-    * (ts read as nanosecond longs — the streaming twin of
-    * EventQueries.events). */
+  /** Schema for file-based streaming reads of the events table: `ts`
+    * is the file's microsecond timestamp without a time zone, as
+    * EventQueries.events reads it. */
   val rawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
-    StructField("ts", LongType),
+    StructField("ts", TimestampNTZType),
     StructField("user_id", LongType),
     StructField("event_type", StringType),
     StructField("value", DoubleType),
@@ -32,12 +32,12 @@ object StreamingOps {
 
   /** `readStream` over a directory of events parquet files (the
     * streaming source tails the directory for new files — the
-    * production ingestion shape). */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    * production ingestion shape). `ts` becomes a TIMESTAMP, the type of
+    * [[Event]]; the engine's sessions run in UTC, so the cast keeps the
+    * batch read's wall-clock values. */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(rawSchema).parquet(dir)
-      .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-  }
+      .withColumn("ts", col("ts").cast(TimestampType))
 
   /** q31's streaming twin: tumbling 1-hour event-time window per
     * event type, 1-hour watermark bounding state. Values quantized to

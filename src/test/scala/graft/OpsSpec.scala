@@ -3,8 +3,11 @@ package graft
 import graft.ann.EmbeddingOps
 import graft.dedup.DedupOps
 import graft.engine.SimilarityOps
+import graft.functions.{MinHashExprs, StemText, VecExprs}
 import graft.multimodal.BinaryOps
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Operator-level specs on tiny crafted corpora (the oracle gate
@@ -180,14 +183,100 @@ class OpsSpec extends AnyFunSuite {
     val df = EmbeddingOps.simsVec(vecs, pairs)
     df.collect() // drive THIS Dataset's QueryExecution so AQE finalizes
     // the AQE final plan marks whole-stage-codegen'd operators "*(n)";
-    // the projection computing graft_dot_q must carry the marker
+    // the projection calling VecExprs.dotBoxed must carry the marker
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("isFinalPlan=true"), s"plan not finalized:\n$plan")
     val projLines = plan.linesIterator
-      .filter(l => l.contains("Project") && l.contains("graft_dot_q")).toSeq
+      .filter(l => l.contains("Project") && l.contains("VecExprs.dotBoxed(")).toSeq
     assert(projLines.nonEmpty, s"no dot_q projection in plan:\n$plan")
     assert(projLines.exists(_.contains("*(")),
       s"dot_q projection not codegen'd:\n${projLines.mkString("\n")}")
+  }
+
+  /** Runs `f` in a fresh session on the shared context: default
+    * codegen, or (`interpreted`) no whole-stage codegen and no
+    * generated expression code, so every kernel call goes through
+    * `StaticInvoke`'s reflective `eval`. */
+  private def onPath[T](interpreted: Boolean)(f: SparkSession => T): T = {
+    val s = spark.newSession()
+    if (interpreted) {
+      s.conf.set("spark.sql.codegen.wholeStage", "false")
+      s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    }
+    f(s)
+  }
+
+  // an RDD-backed relation, not a local one: the optimizer would
+  // evaluate kernels over a LocalRelation itself, on neither path
+  private def rowsDf(s: SparkSession, rows: Seq[Row], schema: StructType) =
+    s.createDataFrame(s.sparkContext.parallelize(rows, 2), schema)
+
+  private val kernelInput = StructType(Seq(
+    StructField("id", IntegerType), StructField("text", StringType),
+    StructField("a", ArrayType(LongType)), StructField("b", ArrayType(LongType)),
+    StructField("emb", ArrayType(FloatType)), StructField("qv", ArrayType(LongType))))
+
+  private val kernels: Seq[(String, Column)] = Seq(
+    "graft_stem" -> StemText.graft_stem(col("text")),
+    "minhash_sigs" -> MinHashExprs.minhash_sigs(col("text")),
+    "band_sigs" -> MinHashExprs.band_sigs(col("text")),
+    "shingle_sk" -> MinHashExprs.shingle_sk(col("text")),
+    "quantize_vec" -> VecExprs.quantize_vec(col("emb"), EmbeddingOps.QuantScale),
+    "dot_q" -> VecExprs.dot_q(col("a"), col("b")),
+    "bucket_strs" -> VecExprs.bucket_strs(col("qv"), 4))
+
+  test("kernel columns agree between codegen and interpreted evaluation") {
+    val vec = Seq.tabulate(64)(i => (i * 37 % 19 - 9).toLong)
+    val cases = Seq(
+      "null" -> Row(0, null, null, null, null, null),
+      "empty" -> Row(1, "", Seq(), Seq(), Seq(), Seq()),
+      "length mismatch" -> Row(2, "aa bb", Seq(1L, 2L), Seq(3L),
+        Seq(0.5f), Seq(1L, -2L)),
+      "null elements" -> Row(3, "aa bb cc", Seq(1L, null), Seq(1L, 2L),
+        Seq(0.1f, null), Seq(null, 3L)),
+      "normal" -> Row(4, "the quick brown foxes jumped over lazy dogs",
+        vec, vec.reverse, Seq.tabulate(64)(i => math.sin(i * 0.7 - 3).toFloat),
+        vec))
+    val results = Seq(false, true).map { interpreted =>
+      onPath(interpreted) { s =>
+        val df = rowsDf(s, cases.map(_._2), kernelInput)
+          .select(col("id") +: kernels.map { case (n, k) => k.as(n) }: _*)
+        // the two paths really differ: only codegen marks the projection
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("*(") != interpreted, plan)
+        df.collect().map(r => r.getInt(0) -> r.toSeq.tail).toMap
+      }
+    }
+    for (((label, _), id) <- cases.zipWithIndex;
+         ((name, _), k) <- kernels.zipWithIndex)
+      assert(results(0)(id)(k) == results(1)(id)(k), s"$name on $label input")
+    // the cases reach the kernels' null and empty branches
+    val dotQ = kernels.indexWhere(_._1 == "dot_q")
+    val buckets = kernels.indexWhere(_._1 == "bucket_strs")
+    assert(results(0)(0).forall(_ == null))
+    assert(results(0)(2)(dotQ) == null && results(0)(3)(dotQ) == null)
+    assert(results(0)(1)(dotQ) == 0L && results(0)(1)(buckets) == null)
+    assert(results(0)(4).forall(_ != null))
+  }
+
+  test("kernel errors are the same on the codegen and interpreted paths") {
+    def rootCause(t: Throwable): Throwable =
+      if (t.getCause == null || (t.getCause eq t)) t else rootCause(t.getCause)
+    val cases = Seq(
+      "quantize_vec of NaN" -> (Row(0, null, null, null, Seq(Float.NaN), null),
+        VecExprs.quantize_vec(col("emb"), EmbeddingOps.QuantScale)),
+      "dot_q overflow" -> (Row(0, null, Seq(Long.MaxValue, 2L), Seq(2L, 1L), null, null),
+        VecExprs.dot_q(col("a"), col("b"))))
+    for ((label, (row, kernel)) <- cases) {
+      val errors = Seq(false, true).map { interpreted =>
+        onPath(interpreted) { s =>
+          rootCause(intercept[Exception](
+            rowsDf(s, Seq(row), kernelInput).select(kernel).collect()))
+        }
+      }
+      assert(errors.forall(_.isInstanceOf[ArithmeticException]), s"$label: $errors")
+      assert(errors(0).getMessage == errors(1).getMessage, label)
+    }
   }
 
   test("shingle_sk matches conv(substr(md5, 1, 15), 16, 10)") {

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.Event
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives each streaming operator with a MemoryStream source and a
@@ -105,9 +106,16 @@ class StreamingSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("file_hourly")
       .outputMode("update").start()
     q.processAllAvailable()
-    val n = spark.table("file_hourly").count()
+    // the streamed windows are batch q31's rows: same wall-clock hours
+    // (the file's µs timestamps), counts and cent-exact sums
+    val key = Seq(col("hour").cast("string"), col("event_type"),
+      col("n"), col("total_value"))
+    val streamed = spark.table("file_hourly").select(key: _*).collect().toSet
     q.stop()
-    assert(n > 0)
+    val batch = graft.queries.EventQueries.q31.run(spark, dir.getPath)
+      .select(key: _*).collect().toSet
+    assert(batch.nonEmpty)
+    assert(streamed == batch)
   }
 
   test("stream-static join enriches live events with a batch dimension") {
