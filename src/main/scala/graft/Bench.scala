@@ -36,6 +36,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * same file. Stdout keeps its single JSON line.
   */
 object Bench {
+
+  /** plan_hash_v2 normalization: scrubs expression and plan ids, the
+    * sfDir path prefix, JVM lambda identifiers
+    * (ClassName$$Lambda$123/0x00007f...@4ac1b2c3) and object identity
+    * hashes (TopKByScore@713d2fe8), so identical code hashes the same
+    * across runs and hosts. An identity hash follows an identifier, so
+    * only an `@hex` right after one is scrubbed: `'@beef'` in a string
+    * literal is data and stays. */
+  def normalizeV2(plan: String, sfDir: String): String =
+    plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
+      .replace(sfDir, "<SF_DIR>")
+      .replaceAll("\\$\\$?Lambda[$/][^,\\s)\\]]*", "\\$\\$Lambda\\$x")
+      // {1,16}: Integer.toHexString of an identity hash can be one digit
+      .replaceAll("([\\w$\\]])@[0-9a-f]{1,16}\\b", "$1@x")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
@@ -86,22 +101,6 @@ object Bench {
       System.gc()
       dt
     }
-    // plan_hash_v2 normalization, kept VERBATIM so untouched queries'
-    // hashes stay comparable round-over-round: expression and plan ids
-    // (r21), plus the run-varying tokens that flipped q35/q40 between
-    // byte-identical runs — JVM lambda identifiers
-    // (ClassName$$Lambda$123/0x00007f...@4ac1b2c3) and object identity
-    // hashes (TopKByScore@713d2fe8) — and the sfDir path prefix (scan
-    // Location), so the hash is identical across runs AND across hosts
-    // with different data directories
-    def normalize(plan: String): String =
-      plan.replaceAll("#\\d+", "#x").replaceAll("plan_id=\\d+", "plan_id=x")
-        .replace(sfDir, "<SF_DIR>")
-        .replaceAll("\\$\\$?Lambda[$/][^,\\s)\\]]*", "\\$\\$Lambda\\$x")
-        // {1,16}: Integer.toHexString of an identity hash can be as
-        // short as one digit — a 6-digit lower bound would let rare
-        // short hashcodes flip the hash on identical code
-        .replaceAll("@[0-9a-f]{1,16}\\b", "@x")
     // per-query shuffle-byte observability (r22): a SparkListener sums
     // task-level shuffle-write bytes/records for the jobs of each
     // query's meta-pass noop execution (matched via the thread-local
@@ -156,7 +155,7 @@ object Bench {
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val hashV2 = graft.dedup.MinHashLocal.md5hex(normalize(plan))
+        val hashV2 = graft.dedup.MinHashLocal.md5hex(normalizeV2(plan, sfDir))
         // counts from the one-line-per-operator tree (the formatted
         // string lists operators twice: tree + details)
         val tree = qe.executedPlan.toString

@@ -106,22 +106,22 @@ object DedupOps {
       |regexp_replace(text, '^[^ ]+ ', '') AS text
       |FROM documents WHERE doc_id % 20 = 0""".stripMargin
 
-  /** MinHash signatures: for each seed h in [0, numHashes), the
+  /** MinHash signatures: for each seed h in [0, NumHashes), the
     * lexicographic min of `md5(h || '|' || shingle)` over the doc's
     * shingle set. One shuffle (groupBy doc_id, h); fan-out bounded by
-    * numHashes. Returns `(doc_id, h, minhash)`. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = NumHashes): DataFrame =
-    sh.withColumn("h", explode(sequence(lit(0L), lit(numHashes - 1L))))
+    * NumHashes. Returns `(doc_id, h, minhash)`. */
+  def minhashSignatures(sh: DataFrame): DataFrame =
+    sh.withColumn("h", explode(sequence(lit(0L), lit(NumHashes - 1L))))
       .groupBy("doc_id", "h")
       .agg(min(md5(concat(col("h").cast("string"), lit("|"), col("shingle"))
         .cast("binary"))).as("minhash"))
 
-  def minhashSignaturesSql(shinglesRel: String, numHashes: Int = NumHashes): String =
+  def minhashSignaturesSql(shinglesRel: String): String =
     s"""SELECT doc_id, h, min(md5(CAST(h AS VARCHAR) || '|' || shingle)) AS minhash
-       |FROM $shinglesRel, range($numHashes) t(h)
+       |FROM $shinglesRel, range($NumHashes) t(h)
        |GROUP BY doc_id, h""".stripMargin
 
-  /** LSH banding: the signature's `numHashes` rows split into `bands`
+  /** LSH banding: the signature's `NumHashes` rows split into `bands`
     * contiguous bands; a band signature is the md5 of its concatenated
     * minhashes (CASE-pivot keeps the concat order deterministic without
     * an ordered string_agg, which Spark lacks). Docs sharing any

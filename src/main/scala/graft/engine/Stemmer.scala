@@ -40,13 +40,6 @@ object Stemmer {
       isConsonant(w, n - 1) && !"wxy".contains(w.charAt(n - 1))
   }
 
-  private def replaceSuffix(w: String, suf: String, rep: String,
-      cond: String => Boolean): Option[String] =
-    if (w.endsWith(suf)) {
-      val stem = w.substring(0, w.length - suf.length)
-      if (cond(stem)) Some(stem + rep) else Some(w)
-    } else None
-
   private def step1a(w: String): String =
     if (w.endsWith("sses")) w.dropRight(2)
     else if (w.endsWith("ies")) w.dropRight(2)

@@ -9,49 +9,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * and never cache the raw table.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Scale-adaptive CPU spread for expression-heavy map stages
-    * (tokenize/explode, digest, kernel math): round-robin repartition
-    * to the default parallelism ONLY when the scan has fewer
-    * partitions. The test tables are single-row-group parquet files —
-    * parquet cannot split inside a row group, so every scan here is
-    * one task and the per-row work serializes on one core no matter
-    * the cluster size; a production many-split input already has scan
-    * parallelism and skips the extra exchange entirely (the gate reads
-    * the planned scan partitioning, not a constant). */
-  def spread(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  /** KEYED spread (r22, guide §2.4): same gate as [[spread]], but
-    * hash-partitions by `keys` instead of round-robin — same shuffled
-    * bytes, and the exchange then ALSO satisfies every downstream
-    * aggregation/window clustered by a superset of `keys`
-    * (HashPartitioning(k) satisfies ClusteredDistribution(k, ...)), so
-    * e.g. a doc_id-keyed spread before tokenize makes the
-    * (doc_id, tok) term-frequency aggregation AND the per-doc norms
-    * aggregation exchange-free. On a many-split production scan the
-    * gate skips the repartition and those aggregations keep their own
-    * (partial+final, map-side-combined) exchanges — the partial
-    * aggregates there are cheaper to move than the raw text. Note the
-    * gate reads `df.rdd.getNumPartitions` — a driver-side plan
-    * materialization (pre-AQE view), fine at query-construction
-    * frequency, not for reuse inside loops. */
-  def spreadBy(df: DataFrame, keys: Column*): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // the partition count is passed EXPLICITLY: a bare repartition(keys)
-    // is REPARTITION_BY_COL, which AQE may coalesce down to one
-    // partition on small/mid inputs — re-serializing the very map stage
-    // the spread exists to parallelize (measured: q23 2.9 s coalesced
-    // vs 1.1 s pinned). A num-pinned repartition AQE must preserve.
-    if (df.rdd.getNumPartitions < target) df.repartition(target, keys: _*)
-    else df
-  }
+  /** CPU spread for expression-heavy map stages (tokenize/explode,
+    * digest, kernel math): repartition to the default parallelism.
+    * Unconditional: a single-row-group parquet file keeps all its rows
+    * in one task however many (empty) splits it plans, and reading the
+    * split count would plan the input at construction time. An input
+    * that already has scan parallelism pays one extra exchange.
+    *
+    * With `keys` the spread hash-partitions instead of round-robin: the
+    * same shuffled bytes, and the exchange also serves every later
+    * aggregation or window clustered by a superset of `keys` (a doc_id
+    * spread before tokenize makes the (doc_id, tok) tf and per-doc norm
+    * aggregations exchange-free). The count is pinned because AQE may
+    * coalesce a bare `repartition(keys)` to one partition (measured:
+    * q23 2.9 s coalesced vs 1.1 s pinned). */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
 }

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * real Spark shape for 100 TB media pipelines: binary column + typed
   * metadata struct, `mapPartitions` so a real decoder amortizes model/
   * codec init per partition (the Scala analogue of `mapInPandas` batch
-  * decoding), and partition-count control so each task's batch fits
-  * executor memory next to a decoder.
+  * decoding). A real decoder's caller sizes each task's batch by
+  * repartitioning the input first, so total/partitions bytes fit
+  * executor memory next to the decoder.
   */
 object BinaryOps {
 
@@ -43,14 +44,10 @@ object BinaryOps {
   }
 
   /** Decode a `(doc_id, payload binary)` DataFrame into typed
-    * metadata via per-partition batches. `partitions` sizes each
-    * task's batch (at 100 TB: bytes-per-task ≈ total/partitions must
-    * fit next to the decoder's working set). */
-  def decodeAll(spark: SparkSession, media: DataFrame,
-      partitions: Int = 0): Dataset[MediaMeta] = {
+    * metadata via per-partition batches. */
+  def decodeAll(spark: SparkSession, media: DataFrame): Dataset[MediaMeta] = {
     import spark.implicits._
-    val sized = if (partitions > 0) media.repartition(partitions) else media
-    sized.select(col("doc_id").cast("long"), col("payload"))
+    media.select(col("doc_id").cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         // per-partition init happens here in a real decoder

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * composable module over a reference-shaped products table
   * (FIXTURES.md §A). Each stage is a pure DataFrame function; the
   * driver-table generalizations live in `graft.queries`, this is the
-  * faithful end-to-end replica.
+  * faithful end-to-end replica. Building a stage's DataFrame runs no
+  * Spark job, except in `loadCsv`: it infers the CSV schema and counts
+  * each partition's rows eagerly, because the dense `row_id` needs them.
   */
 object ProductPipeline {
 
@@ -32,7 +34,8 @@ object ProductPipeline {
     * ADVICE r21). The r20 single-task global window remains gone.
     * Both the count job and the final read plan the same file splits
     * (same session, files and conf → deterministic planning), which
-    * PipelineSpec's repeated-load determinism test pins. */
+    * PipelineSpec's repeated-load determinism test pins; if they ever
+    * diverge, the read fails (see the guard below). */
   def loadCsv(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.option("header", "true").option("inferSchema", "true")
       .csv(path)
@@ -42,23 +45,26 @@ object ProductPipeline {
       .groupBy("pid").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
-    val bases = counts.map { case (pid, n) => val b = acc; acc += n; (pid, b) }
+    val bases = counts.map { case (pid, n) => val b = acc; acc += n; (pid, b, n) }
     import spark.implicits._
-    val baseDf = bases.toSeq.toDF("__pid", "__base")
+    val baseDf = bases.toSeq.toDF("__pid", "__base", "__n")
+    val offset = col("__mid").bitwiseAND(offsetMask)
     // LEFT join + loud guard: the counts job and this read plan the
     // same splits in practice (same session/files/conf), but if they
-    // ever diverge, a pid unseen by the counts job must FAIL the load
-    // — an inner join would silently drop its rows instead
+    // ever diverge, a pid unseen by the counts job or an offset past
+    // its count must FAIL the load — an inner join would silently drop
+    // rows, and an unchecked offset would collide with the next base
     raw.withColumn("__mid", mid)
       .withColumn("__pid", shiftright(col("__mid"), 33))
       .join(broadcast(baseDf), Seq("__pid"), "left")
       .withColumn("row_id",
-        when(col("__base").isNull, raise_error(concat(
+        when(col("__base").isNull || offset >= col("__n"), raise_error(concat(
           lit("loadCsv: partition planning diverged between the " +
             "per-partition count job and the read (pid "),
-          col("__pid"), lit(" has no base offset)"))).cast("long"))
-          .otherwise(col("__base") + col("__mid").bitwiseAND(offsetMask)))
-      .drop("__pid", "__base", "__mid")
+          col("__pid"), lit(" offset "), offset,
+          lit(" has no counted row)"))).cast("long"))
+          .otherwise(col("__base") + offset))
+      .drop("__pid", "__base", "__n", "__mid")
   }
 
   /** E1 cleaning — P1 ×4 (`amazon1.py:51-59`) + P2/P3 discount
@@ -123,9 +129,9 @@ object ProductPipeline {
     * exact cosine → per-row top-k (T3). All-pairs is the reference's
     * own semantics and is meant for the ≈10k-row products table; the
     * unbounded-corpus scale path is the LSH family in `graft.dedup`.
+    * The vocabulary cap is the reference's `max_features=5000`.
     * Returns `(i, j, rn, cos)` plus the deduped base as a pair. */
-  def buildIndex(products: DataFrame, k: Int = 10,
-      vocabCap: Int = 5000): (DataFrame, DataFrame) = {
+  def buildIndex(products: DataFrame, k: Int = 10): (DataFrame, DataFrame) = {
     val base = dedupKeepFirst(products)
       .na.drop(Seq("name"))
       .withColumn("image_id", shortenImageUrl(col("image")))
@@ -135,7 +141,7 @@ object ProductPipeline {
       searchTerms(col("name")).as("text"))
     val tfAll = SimilarityOps.termFreq(docs, dropStopwords = true)
     val vocab = tfAll.groupBy("tok").agg(sum(col("tf")).as("ctf"))
-      .orderBy(desc("ctf"), asc("tok")).limit(vocabCap).select("tok")
+      .orderBy(desc("ctf"), asc("tok")).limit(5000).select("tok")
     val tf = tfAll.join(broadcast(vocab), Seq("tok"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (base, SimilarityOps.cosineTopKFrom(tf, tf, k))
@@ -150,12 +156,16 @@ object ProductPipeline {
   def loadIndex(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** E3 — `get_similar_products` (`amazon1.py:181-202`): exact-name
-    * lookup first (F4; keep-first by row_id — documented deterministic
-    * choice where Py keeps last and R keeps first, SURVEY.md §2.3),
-    * then case-sensitive substring match on the shortened link (F3),
-    * then gather k neighbors (J2) and project the display columns
-    * (M6). Returns an empty DataFrame when nothing matches.
+  /** E3 — `get_similar_products` (`amazon1.py:181-202`) as one lazy
+    * plan: a lookup, then a gather. The query id is one aggregate over
+    * `base`: the lowest `row_id` with an exact name match (F4; keep-first
+    * by row_id — documented deterministic choice where Py keeps last and
+    * R keeps first, SURVEY.md §2.3), else the lowest `row_id` whose
+    * shortened link contains the query case-sensitively (F3). It enters
+    * the neighbor filter as a scalar subquery, so building the result
+    * runs no Spark job; then the k neighbors are gathered (J2) and the
+    * display columns projected (M6). When nothing matches the id is
+    * null and the result is empty, with the same 8 columns.
     *
     * Deviations from the reference, both deliberate: (1) a query doc
     * with no token overlap returns 0 rows — the reference's dense
@@ -165,21 +175,11 @@ object ProductPipeline {
     * fallback — same behavior as Python's `'' in s == True`. */
   def recommend(base: DataFrame, neighbors: DataFrame, query: String,
       k: Int = 5): DataFrame = {
-    val exact = base.filter(col("name") === query)
-      .select(min(col("row_id")).as("qid"))
-    val exactId = exact.collect().headOption.flatMap(r =>
-      if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    val qid = exactId.orElse {
-      base.filter(instr(col("link_id"), query) > 0)
-        .select(min(col("row_id")).as("qid")).collect().headOption
-        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
-    }
-    // no match: run the same plan with an impossible id so the empty
-    // result keeps the full 8-column schema (callers can still select
-    // or union it; the reference just prints a message)
-    val id = qid.getOrElse(-1L)
-    neighbors.filter(col("i") === id && col("rn") <= k)
-      .join(base, col("j") === base("row_id"))
+    val qid = base.agg(coalesce(
+      min(when(col("name") === query, col("row_id"))),
+      min(when(instr(col("link_id"), query) > 0, col("row_id")))))
+    neighbors.filter(col("i") === qid.scalar() && col("rn") <= k)
+      .join(base, col("j") === col("row_id"))
       .orderBy("rn")
       .select(col("rn"), col("name"), col("ratings_cleaned"),
         col("no_of_ratings_cleaned"), col("discount_price_cleaned"),

@@ -115,15 +115,19 @@ object CoverageQueries {
       .orderBy("op", "c_custkey")
   }
 
+  /** The window-form oracle shared by q40 and q45: each customer's
+    * top-3 orders by price, order key breaking ties. */
+  private val top3OrdersSql =
+    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
+      |SELECT o_custkey, o_orderkey, o_totalprice,
+      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
+      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin
+
   /** §2.11 UDAF — q11's per-customer top-3 recomputed through the
     * one-pass bounded-buffer [[graft.functions.TopKByScore]] aggregator
     * instead of a ranking window; the oracle is the window form, so
     * the hash-match proves the fused aggregate is semantics-identical. */
-  val q40 = Q("q40_topk_aggregate",
-    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-      |SELECT o_custkey, o_orderkey, o_totalprice,
-      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) {
+  val q40 = Q("q40_topk_aggregate", top3OrdersSql) {
     (s, dir) =>
       import s.implicits._
       val topk = new graft.functions.TopKByScore(3).toColumn
@@ -198,11 +202,7 @@ object CoverageQueries {
     * native `TypedImperativeAggregate` ([[graft.functions.TopKScoreId]])
     * — expression-layer, primitive buffers, k-bounded shuffle; the
     * window-form oracle again proves semantic identity. */
-  val q45 = Q("q45_topk_imperative",
-    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-      |SELECT o_custkey, o_orderkey, o_totalprice,
-      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) {
+  val q45 = Q("q45_topk_imperative", top3OrdersSql) {
     (s, dir) =>
       Tables(s, dir, "orders")
         .groupBy("o_custkey")

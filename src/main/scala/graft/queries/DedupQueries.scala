@@ -35,9 +35,8 @@ object DedupQueries {
     s"""WITH sh AS (${DedupOps.shinglesSql("documents")})
       |${DedupOps.minhashSignaturesSql("sh")}
       |ORDER BY doc_id, h""".stripMargin) { (s, dir) =>
-    // spread first (scale-adaptive): the corpus is one small parquet
-    // file (one input split), and signing is the CPU cost — a
-    // many-split production scan skips the exchange
+    // spread first: the corpus is one small parquet row group (one
+    // non-empty input split), and signing is the CPU cost
     Tables.spread(Tables(s, dir, "documents").select("doc_id", "text"))
       .select(col("doc_id"),
         posexplode(graft.functions.MinHashExprs.minhash_sigs(col("text")))
@@ -73,7 +72,7 @@ object DedupQueries {
     // r22: spread keyed by doc_id — same bytes as round-robin, and the
     // shk branch's (doc_id, sk) distinct + per-doc counts then run on
     // THIS exchange (the separate repartition(doc_id) it used is gone)
-    val docs = Tables.spreadBy(
+    val docs = Tables.spread(
       DedupOps.augmented(Tables(s, dir, "documents")), col("doc_id"))
     // repartition by the join key BEFORE persisting: the cached
     // partitioning serves both sides of the (band, sig) self-join, so
@@ -120,7 +119,7 @@ object DedupQueries {
     // same bytes as the r21 round-robin spread, but the exchange now
     // also satisfies the per-doc vote aggregation's clustering, so the
     // 64-sum hash aggregate runs with no exchange of its own
-    val toks = Tables.spreadBy(
+    val toks = Tables.spread(
         Tables(s, dir, "documents").select("doc_id", "text"), col("doc_id"))
       .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
     DedupOps.simhashBits(toks).orderBy("doc_id", "b")

@@ -11,14 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object EventQueries {
 
-  /** `events.ts` is microsecond parquet without a time zone
-    * (`isAdjustedToUTC = false`), which Spark reads as TIMESTAMP_NTZ.
-    * The oracle casts the same column to TIMESTAMP, so both engines
-    * see the same wall-clock values. */
-  def events(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Tables(s, dir, "events")
-
-  /** The events relation as seen by the DuckDB oracle (µs TIMESTAMP). */
+  /** The events relation as seen by the DuckDB oracle. `events.ts` is
+    * microsecond parquet without a time zone (`isAdjustedToUTC =
+    * false`), which Spark reads as TIMESTAMP_NTZ; the oracle casts the
+    * same column to TIMESTAMP, so both engines see the same wall-clock
+    * values. */
   private val evSql = "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) ev"
 
   /** Tumbling 1-hour event-time window per event type. Value sums are
@@ -28,7 +25,7 @@ object EventQueries {
       |CAST(sum(CAST(round(value * 100.0) AS BIGINT)) AS DOUBLE) / 100.0 AS total_value
       |FROM $evSql GROUP BY hour, event_type ORDER BY hour, event_type""".stripMargin) {
     (s, dir) =>
-      events(s, dir)
+      Tables(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           (sum(round(col("value") * 100.0).cast("long").cast("decimal(38,0)"))
@@ -47,7 +44,7 @@ object EventQueries {
     (s, dir) =>
       val w = Window.partitionBy(col("user_id"), col("event_type"))
         .orderBy(col("ts"), col("event_id"))
-      events(s, dir)
+      Tables(s, dir, "events")
         .select(col("user_id"), col("event_type"), col("event_id"),
           col("ts"), col("value"))
         .withColumn("rn", row_number().over(w))
@@ -73,7 +70,7 @@ object EventQueries {
       |ORDER BY user_id, session_id""".stripMargin) { (s, dir) =>
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events(s, dir)
+    Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("is_new",
         when(lag(col("ts"), 1).over(wOrd).isNull ||
@@ -95,7 +92,7 @@ object EventQueries {
       |GROUP BY k_bucket ORDER BY k_bucket""".stripMargin) { (s, dir) =>
     // no spread: one was tried and reverted — the JSON parse of this
     // table is cheaper than the exchange
-    events(s, dir)
+    Tables(s, dir, "events")
       .select(col("event_id"),
         (get_json_object(col("props"), "$.k").cast("long") % 10).as("k_bucket"))
       .groupBy("k_bucket")

@@ -31,8 +31,8 @@ object MultimodalQueries {
   /** Typed per-partition decode of binary payloads (stubbed decoder,
     * real Spark plumbing — see graft.multimodal.BinaryOps). */
   val q35 = Q.noOracle("q35_multimodal_decode") { (s, dir) =>
-    // no spread: the stub decode is cheap per row, and BinaryOps
-    // exposes `partitions` for callers with a real (expensive) decoder
+    // no spread: the stub decode is cheap per row; a real (expensive)
+    // decoder would repartition the media first (see BinaryOps)
     val media = Tables(s, dir, "documents")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
     BinaryOps.decodeAll(s, media).toDF().orderBy("doc_id")

@@ -19,7 +19,7 @@ object TextQueries {
     // the (doc_id, tok) aggregation's own exchange (guide §2.4), so
     // tokenize runs on all cores at the same exchange count
     SimilarityOps.termFreq(
-      Tables.spreadBy(Tables(s, dir, "documents").select("doc_id", "text"),
+      Tables.spread(Tables(s, dir, "documents").select("doc_id", "text"),
         col("doc_id")),
       dropStopwords = false)
       .orderBy("doc_id", "tok")
@@ -87,7 +87,7 @@ object TextQueries {
     // per-doc j-norms aggregation — both aggregations now run with no
     // exchange of their own (guide §2.4 exchange sharing)
     val tf = SimilarityOps.termFreq(
-      Tables.spreadBy(docs.select("doc_id", "text"), col("doc_id")),
+      Tables.spread(docs.select("doc_id", "text"), col("doc_id")),
       dropStopwords = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the broadcast QUERY side is rebuilt from a pruned scan
@@ -97,7 +97,7 @@ object TextQueries {
     // both the inverted-index probe side and the i-norms (which also
     // share the doc_id-keyed exchange)
     val tfQ = SimilarityOps.termFreq(
-      Tables.spreadBy(
+      Tables.spread(
         docs.select("doc_id", "text").filter(col("doc_id") < 100),
         col("doc_id")),
       dropStopwords = true)
@@ -124,7 +124,7 @@ object TextQueries {
       // doc_id-keyed spread: one exchange serves tokenize spreading,
       // the tf aggregation and the j-norms aggregation (as in q18)
       val tf = SimilarityOps.termFreq(
-        Tables.spreadBy(docs.select("doc_id", "text"), col("doc_id")),
+        Tables.spread(docs.select("doc_id", "text"), col("doc_id")),
         dropStopwords = true)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // query side: tokenize ONLY the one semi-joined document (a

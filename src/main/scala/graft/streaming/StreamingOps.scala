@@ -21,7 +21,7 @@ object StreamingOps {
 
   /** Schema for file-based streaming reads of the events table: `ts`
     * is the file's microsecond timestamp without a time zone, as
-    * EventQueries.events reads it. */
+    * the batch EventQueries read it. */
   val rawSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", TimestampNTZType),

@@ -2,7 +2,7 @@ package graft
 
 import graft.ann.EmbeddingOps
 import graft.dedup.DedupOps
-import graft.engine.SimilarityOps
+import graft.engine.{SimilarityOps, Tables}
 import graft.functions.{MinHashExprs, StemText, VecExprs}
 import graft.multimodal.BinaryOps
 import org.apache.spark.sql.{Column, Row, SparkSession}
@@ -291,10 +291,37 @@ class OpsSpec extends AnyFunSuite {
     assert(rows.forall(_.getLong(0) >= 0L))
   }
 
+  test("Tables.spread spreads a single row group that plans many splits") {
+    // one parquet row group can plan several splits, all but one empty;
+    // the spread must still move its rows onto more than one partition
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    spark.range(0, 20000).selectExpr("id", "cast(id * 7 as string) AS s")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val keys = Seq("spark.sql.files.maxPartitionBytes",
+      "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val target = spark.sparkContext.defaultParallelism
+    try {
+      val bytes = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      spark.conf.set(keys(0), math.max(1L, bytes / (2L * target)).toString)
+      spark.conf.set(keys(1), "1")
+      val df = spark.read.parquet(dir)
+      assert(df.rdd.getNumPartitions >= target, "precondition: many splits")
+      val rowsPerPartition = Tables.spread(df)
+        .groupBy(spark_partition_id()).count().collect()
+      assert(rowsPerPartition.length >= 2)
+      assert(rowsPerPartition.map(_.getLong(1)).sum == 20000L)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("decodeStub is deterministic; decodeAll keeps every row") {
     val media = docs(1L -> "hello", 2L -> "a longer payload here", 3L -> "")
       .select(col("doc_id"), col("text").cast("binary").as("payload"))
-    val out = BinaryOps.decodeAll(spark, media, partitions = 2)
+    val out = BinaryOps.decodeAll(spark, media)
       .collect().map(m => m.doc_id -> m).toMap
     assert(out.size == 3)
     assert(out(1L).byte_len == 5L)

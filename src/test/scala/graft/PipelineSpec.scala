@@ -102,6 +102,52 @@ class PipelineSpec extends AnyFunSuite {
     assert(none.count() == 0)
   }
 
+  test("E3: recommend builds its plan without running a job, and pins the rows") {
+    // materialise the lazy fixture first: loading the CSV runs jobs
+    assert(base.columns.nonEmpty && neighbors.columns.nonEmpty)
+    val queries = Seq("Dell Wireless Mouse WM126", "oneplus-nord-ce-2-lite",
+      "no-such-product-xyz", "")
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val recs = try {
+      val built = queries.map(q => q -> P.recommend(base, neighbors, q))
+      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+      built
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0, "building a recommend plan started a job")
+    val dell = Seq(
+      Seq(1L, "Dell Wired Mouse MS116", 4.0, 2345.0, 399.0, 799.0,
+        "IMGDELL2", "dell-wired-mouse-ms116/dp/B02"),
+      Seq(2L, "HP Wireless Mouse Z3700", 4.3, 987.0, 1049.0, 1599.0,
+        "IMGHP1", "hp-wireless-mouse-z3700/dp/B03"),
+      Seq(3L, "Logitech M235 Wireless Mouse", 4.4, 5678.0, 795.0, 1295.0,
+        "IMGLOGI1", "logitech-m235-wireless-mouse/dp/B04"))
+    val expected = Map(
+      // exact name, lowest row_id
+      "Dell Wireless Mouse WM126" -> dell,
+      // link substring
+      "oneplus-nord-ce-2-lite" -> Seq(
+        Seq(1L, "OnePlus Nord CE 2 5G", 4.1, 32100.0, 22999.0, 24999.0,
+          "IMGOP2", "oneplus-nord-ce-2/dp/B06")),
+      "no-such-product-xyz" -> Seq.empty,
+      // documented deviation (2): '' is a substring of every link, so
+      // the first row (the Dell mouse, row_id 0) is the query
+      "" -> dell)
+    for ((q, rec) <- recs) {
+      assert(rec.columns.toSeq == Seq("rn", "name", "ratings_cleaned",
+        "no_of_ratings_cleaned", "discount_price_cleaned",
+        "actual_price_cleaned", "image_id", "link_id"), q)
+      assert(rec.collect().map(_.toSeq).toSeq == expected(q), q)
+    }
+  }
+
   test("S3/S4: HTML sinks render bounded results") {
     val html = HtmlSink.tableHtml(P.top10(base), 10)
     assert(html.contains("<table>") && html.contains("no_of_ratings_cleaned"))
@@ -150,6 +196,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(!plan.contains("ExistingRDD") && !plan.contains("Scan rdd"),
       "no RDD scan at ingest")
     assert(plan.contains("Scan csv"), "CSV file-source scan survives")
+  }
+
+  test("S2: loadCsv fails loudly when a partition holds more rows than it counted") {
+    // same byte length, so the read plans the same single split, but 6
+    // rows where the count job saw 3: offsets 3..5 have no counted row
+    // and would collide with the next partition's ids
+    val file = java.nio.file.Files.createTempFile("graft_diverge", ".csv")
+    val before = "name,n\nalpha,100\nbravo,200\ncharl,300\n"
+    val after = "name,n\naa,1\nbb,2\ncc,3\ndd,4\nee,5\nff,6\n"
+    assert(before.length == after.length)
+    java.nio.file.Files.write(file, before.getBytes("UTF-8"))
+    val df = P.loadCsv(spark, file.toString)
+    java.nio.file.Files.write(file, after.getBytes("UTF-8"))
+    val e = intercept[Exception](df.select("row_id").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("loadCsv:")), e)
   }
 
   test("E1: top-10 sorts by count desc with nulls last") {

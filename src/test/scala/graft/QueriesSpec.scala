@@ -37,6 +37,14 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("plan_hash_v2 normalization scrubs identity hashes, not literals") {
+    val plan = "Filter (text#12 = '@beef') TopKByScore@713d2fe8 " +
+      "Topk$@1a2b Scan parquet /data/sf/documents.parquet"
+    assert(Bench.normalizeV2(plan, "/data/sf") ==
+      "Filter (text#x = '@beef') TopKByScore@x " +
+        "Topk$@x Scan parquet <SF_DIR>/documents.parquet")
+  }
+
   test("q01 top-parts is sorted desc with deterministic ties") {
     val rows = SparkEntry.queries("q01_top_parts")(spark, sf).collect()
     val prices = rows.map(_.getDouble(3)).toSeq
