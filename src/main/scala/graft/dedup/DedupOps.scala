@@ -106,49 +106,21 @@ object DedupOps {
       |regexp_replace(text, '^[^ ]+ ', '') AS text
       |FROM documents WHERE doc_id % 20 = 0""".stripMargin
 
-  /** MinHash signatures: for each seed h in [0, NumHashes), the
-    * lexicographic min of `md5(h || '|' || shingle)` over the doc's
-    * shingle set. One shuffle (groupBy doc_id, h); fan-out bounded by
-    * NumHashes. Returns `(doc_id, h, minhash)`. */
-  def minhashSignatures(sh: DataFrame): DataFrame =
-    sh.withColumn("h", explode(sequence(lit(0L), lit(NumHashes - 1L))))
-      .groupBy("doc_id", "h")
-      .agg(min(md5(concat(col("h").cast("string"), lit("|"), col("shingle"))
-        .cast("binary"))).as("minhash"))
-
+  /** MinHash signatures in the oracle's relational form: for each
+    * seed h in [0, NumHashes), the lexicographic min of
+    * `md5(h || '|' || shingle)` over the doc's shingle set, as
+    * `(doc_id, h, minhash)`. The engine signs row-locally instead
+    * ([[MinHashLocal.minhashes]] behind q21's native `minhash_sigs`
+    * column), to the same values. */
   def minhashSignaturesSql(shinglesRel: String): String =
     s"""SELECT doc_id, h, min(md5(CAST(h AS VARCHAR) || '|' || shingle)) AS minhash
        |FROM $shinglesRel, range($NumHashes) t(h)
        |GROUP BY doc_id, h""".stripMargin
 
-  /** LSH banding: the signature's `NumHashes` rows split into `bands`
-    * contiguous bands; a band signature is the md5 of its concatenated
-    * minhashes (CASE-pivot keeps the concat order deterministic without
-    * an ordered string_agg, which Spark lacks). Docs sharing any
-    * (band, signature) bucket become candidate pairs; candidates — and
-    * only candidates — get exact-Jaccard verification. Returns
-    * `(i, j)` distinct candidate pairs. */
-  def lshCandidates(sigs: DataFrame): DataFrame = {
-    val rowsPerBand = NumHashes / Bands
-    val banded = sigs
-      .withColumn("band", floor(col("h") / rowsPerBand).cast("long"))
-      .withColumn("slot", (col("h") % rowsPerBand).cast("long"))
-    val slotCols = (0 until rowsPerBand).map(i =>
-      min(when(col("slot") === i, col("minhash"))).as(s"m$i"))
-    // persisted: both sides of the self-join read this — without it the
-    // whole shingle+minhash pipeline executes twice
-    val bandSigs = banded.groupBy("doc_id", "band")
-      .agg(slotCols.head, slotCols.tail: _*)
-      .select(col("doc_id"), col("band"),
-        md5(concat((0 until rowsPerBand).map(i => col(s"m$i")): _*)
-          .cast("binary")).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    candidatesFromBandSigs(bandSigs)
-  }
-
-  /** Candidate pairs from a `(doc_id, band, sig)` relation — shared by
-    * the relational path above and the native-expression path (q22),
-    * so the collision rule lives in one place. */
+  /** Candidate pairs from a `(doc_id, band, sig)` relation: docs
+    * sharing any (band, signature) bucket, as distinct `(i, j)` with
+    * i < j. Candidates — and only candidates — get exact-Jaccard
+    * verification (q22). */
   def candidatesFromBandSigs(bandSigs: DataFrame): DataFrame = {
     val a = bandSigs.select(col("doc_id").as("i"), col("band"), col("sig"))
     val b = bandSigs.select(col("doc_id").as("j"), col("band"), col("sig"))
@@ -156,6 +128,13 @@ object DedupOps {
       .select("i", "j").distinct()
   }
 
+  /** LSH banding in the oracle's relational form: the signature's
+    * `NumHashes` rows split into `Bands` contiguous bands; a band
+    * signature is the md5 of its concatenated minhashes (the CASE
+    * pivot keeps the concat order deterministic without an ordered
+    * string_agg) — the values of [[MinHashLocal.bandSigs]]. Returns
+    * the distinct `(i, j)` candidate pairs, as
+    * [[candidatesFromBandSigs]] does over the engine's band signatures. */
   def lshCandidatesSql(sigsRel: String): String = {
     val rowsPerBand = NumHashes / Bands
     val slots = (0 until rowsPerBand)

@@ -8,8 +8,10 @@ import graft.engine.TextOps
 /** Row-local MinHash signing — the per-document computation
   * (tokenize → word 3-gram shingles → per-seed min of
   * md5("h|shingle") → per-band md5 of concatenated minhashes) as pure
-  * Scala, byte-identical to the DataFrame pipeline in [[DedupOps]]
-  * (proven by StreamingDedupSpec). Used by the native columns
+  * Scala, byte-identical to the relational form the q21/q22 oracle SQL
+  * computes ([[DedupOps.minhashSignaturesSql]],
+  * [[DedupOps.lshCandidatesSql]]; StreamingDedupSpec also pins it
+  * against a plain md5 reference). Used by the native columns
   * (`graft.functions.MinHashExprs.minhash_sigs` / `band_sigs`) and the
   * streaming dedup operator: signing needs no shuffle at all — the
   * whole corpus is signed map-side and only bucket joins shuffle.
@@ -31,7 +33,7 @@ object MinHashLocal {
   }
 
   /** Distinct word 3-gram shingles; empty for null docs or docs under
-    * 3 tokens (null tolerance matches the DataFrame pipeline and the
+    * 3 tokens (null tolerance matches [[DedupOps.shingles]] and the
     * null-safe native expressions — a null text must not kill a
     * streaming query). */
   def shingles(text: String): Set[String] = {
@@ -72,7 +74,7 @@ object MinHashLocal {
   }
 
   /** The 16 minhashes, seed order. Empty array for shingle-less docs
-    * (mirrors the DataFrame pipeline, where such docs produce no
+    * (mirrors the relational form, where such docs produce no
     * signature rows).
     *
     * r22 per-task-work rewrite (bit-identical output): the per-seed min
@@ -84,7 +86,7 @@ object MinHashLocal {
     * shingle, not once per seed), the 32-char hex alloc, and the string
     * compare; only the 16 winning digests are hex-encoded. Measured
     * ~1.9x on the q22 signing stage; StreamingDedupSpec pins equality
-    * with the relational md5-hex pipeline. */
+    * with a per-seed min of md5-hex strings. */
   def minhashes(text: String): Array[String] = {
     val sh = shingles(text)
     if (sh.isEmpty) return Array.empty

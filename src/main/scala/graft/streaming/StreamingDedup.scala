@@ -6,23 +6,25 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Streaming near-duplicate detection — the streaming twin of the
   * batch MinHash-LSH pipeline (q22): documents arrive on a stream,
   * each is signed row-locally (tokenize → 3-gram shingles → 16
-  * minhashes → 4 band signatures, identical scheme and md5 hashing to
-  * [[graft.dedup.DedupOps]]), and a stateful bucket operator keeps the
-  * doc-ids seen per (band, signature) bucket, emitting candidate
-  * pairs the moment a new arrival collides with history.
+  * minhashes → 4 band signatures, the [[graft.dedup.MinHashLocal]]
+  * scheme q22's native `band_sigs` column uses), and a stateful bucket
+  * operator keeps the doc-ids seen per (band, signature) bucket,
+  * emitting candidate pairs the moment a new arrival collides with
+  * history.
   *
   * Scale shape: signatures are computed map-side with no shuffle; the
   * only stateful shuffle keys by bucket, so state per key is a small
-  * id set bounded by bucket occupancy — and (r21) bounded in TIME by a
-  * processing-time TTL: a bucket idle for `stateTtlMs` is dropped, so
-  * on an unbounded stream total state is O(buckets active within the
-  * TTL window) instead of growing forever. The exact-Jaccard
-  * verification of emitted candidates stays a batch join against the
-  * document store.
+  * id set bounded by bucket occupancy — and bounded in event time: a
+  * bucket that has seen no doc for 30 min of event time is dropped
+  * (see [[candidates]]), so on an unbounded stream total state is
+  * O(buckets active within the last 90 min of event time) instead of
+  * growing forever. The exact-Jaccard verification of emitted
+  * candidates stays a batch join against the document store.
   */
 object StreamingDedup {
 
-  case class Doc(doc_id: Long, text: String)
+  /** A document arriving at event time `ts`. */
+  case class Doc(doc_id: Long, text: String, ts: java.sql.Timestamp)
   /** A bucket collision: doc `i` < doc `j` share band `band`'s
     * signature. The same pair may surface from several bands —
     * consumers dedupe on (i, j). */
@@ -36,43 +38,39 @@ object StreamingDedup {
     graft.dedup.MinHashLocal.bandSigs(text).zipWithIndex
       .map { case (sig, b) => (b.toLong, sig) }.toSeq
 
-  /** Default bucket-state TTL: 30 min of processing-time inactivity. */
-  val DefaultStateTtlMs: Long = 30L * 60 * 1000
-
   /** The stateful bucket operator: per (band, sig) bucket, remember
     * seen doc ids; each new arrival emits one candidate pair per
-    * historical member (ordered i < j). Bucket state expires after
-    * `stateTtlMs` of processing-time inactivity, so state stays
-    * bounded on an unbounded stream; a doc arriving after its bucket
-    * expired is treated as new history.
+    * historical member (ordered i < j).
     *
-    * `stateTtlMs = 0` disables expiry (exact mode for bounded
-    * replays): a registered processing-time timeout makes the engine
-    * keep scheduling no-data batches, which `processAllAvailable`-style
-    * drain-and-assert harnesses never see terminate — bounded test
-    * corpora want NoTimeout, unbounded production streams the TTL. */
-  def candidates(docs: Dataset[Doc],
-      stateTtlMs: Long = DefaultStateTtlMs): Dataset[CandidatePair] = {
+    * State expires in event time, by the rule of
+    * [[StreamingOps.runningUserCounts]]: the signed rows carry the
+    * 1-hour watermark on their doc's `ts`, so late docs are dropped, and
+    * a bucket is removed once the watermark passes the `ts` of its last
+    * doc plus [[StreamingOps.IdleTimeoutMs]] (30 min).
+    * A doc arriving after its bucket expired is treated as new
+    * history: it pairs with nothing seen before the expiry. */
+  def candidates(docs: Dataset[Doc]): Dataset[CandidatePair] = {
     import docs.sparkSession.implicits._
-    val timeoutConf = if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
     docs.flatMap(d => bandSignatures(d.text).map {
-      case (band, sig) => (band, sig, d.doc_id)
+      case (band, sig) => (band, sig, d.doc_id, d.ts)
     })
+      .withWatermark("_4", StreamingOps.watermarkDelay)
       .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState[Set[Long], CandidatePair](
-        OutputMode.Append, timeoutConf) {
-        case ((band, _), rows, state: GroupState[Set[Long]]) =>
+      // state: (doc ids seen, last doc ts in epoch ms)
+      .flatMapGroupsWithState[(Set[Long], Long), CandidatePair](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        case ((band, _), rows, state: GroupState[(Set[Long], Long)]) =>
           if (state.hasTimedOut) {
             state.remove() // idle bucket: drop its id set
             Iterator.empty
           } else {
-            val seen = state.getOption.getOrElse(Set.empty[Long])
-            val arrived = rows.map(_._3).toSet
-            val fresh = arrived -- seen
+            val (seen, last0) = state.getOption.getOrElse((Set.empty[Long], Long.MinValue))
+            val arrived = rows.toSeq
+            val fresh = arrived.map(_._3).toSet -- seen
             val all = seen ++ fresh
-            state.update(all)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
+            val last = arrived.foldLeft(last0)((t, r) => math.max(t, r._4.getTime))
+            state.update((all, last))
+            StreamingOps.expireAfterIdle(state, last)
             (for {
               n <- fresh.iterator
               o <- all.iterator if o != n

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming forms of the engine's event operators
@@ -12,8 +12,29 @@ import org.apache.spark.sql.types._
   * production shape for unbounded input — state is bounded by the
   * watermark, aggregation is incremental, and each operator scales
   * with the shuffle partitioning like its batch twin.
+  *
+  * Every stateful operator here bounds its state in event time only,
+  * so its output follows the data, not the wall clock, and a bounded
+  * replay drains (`processAllAvailable` returns).
   */
 object StreamingOps {
+
+  /** The watermark delay of every operator here but [[sessionized]]: a
+    * batch drops the rows more than this behind the largest `ts` of the
+    * batches before the previous one (the previous batch's watermark). */
+  val WatermarkDelayMs: Long = 60L * 60 * 1000
+
+  /** Event-time idleness after which [[runningUserCounts]] and
+    * [[StreamingDedup.candidates]] drop a key's state. */
+  val IdleTimeoutMs: Long = 30L * 60 * 1000
+
+  private[streaming] val watermarkDelay = s"$WatermarkDelayMs milliseconds"
+
+  /** Times a key out [[IdleTimeoutMs]] after its last event, or at the
+    * next batch if that is behind the current watermark (Spark rejects
+    * it; a batch can keep such rows, see [[WatermarkDelayMs]]). */
+  private[streaming] def expireAfterIdle(state: GroupState[_], lastMs: Long): Unit =
+    state.setTimeoutTimestamp(math.max(lastMs + IdleTimeoutMs, state.getCurrentWatermarkMs()))
 
   /** Typed event row for the stateful operators and test sources. */
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
@@ -44,7 +65,7 @@ object StreamingOps {
     * exact integer cents like the batch form, so incremental
     * aggregation order cannot perturb the sum. */
   def hourlyCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
+    events.withWatermark("ts", watermarkDelay)
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         (sum(round(col("value") * 100.0).cast("long")).cast("double") / 100.0)
@@ -55,7 +76,7 @@ object StreamingOps {
   /** q32's streaming twin: keep-first dedup per (user_id, event_type)
     * with watermark-bounded dedup state. */
   def dedupFirst(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "1 hour")
+    events.withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark(Seq("user_id", "event_type"))
 
   /** q33's streaming twin: native session windows (30-minute gap). */
@@ -77,36 +98,33 @@ object StreamingOps {
 
   /** Custom streaming state via KeyValueGroupedDataset: running
     * per-user event count (the minimal stateful-map shape a user
-    * extends for bespoke state machines). Per-user state expires
-    * after `stateTtlMs` of processing-time inactivity (default 30 min)
-    * so an unbounded user population cannot grow state forever; a user
-    * returning after expiry restarts from zero. `stateTtlMs = 0`
-    * disables expiry (exact mode for bounded replays — see
-    * [[graft.streaming.StreamingDedup.candidates]] on why
-    * drain-and-assert harnesses need NoTimeout).
+    * extends for bespoke state machines).
     *
-    * r22 (output contract fix): expiry emits NOTHING. The r21 form
-    * (mapGroupsWithState) had to return a value from the timeout
-    * invocation and emitted a duplicate final `(uid, last)` record
-    * NoTimeout mode never produced; as flatMapGroupsWithState the
-    * timeout path returns an empty iterator, so the emitted stream is
-    * identical in both modes — TTL only bounds state size. */
-  def runningUserCounts(events: Dataset[Event],
-      stateTtlMs: Long = 30L * 60 * 1000): Dataset[(Long, Long)] = {
+    * State expires in event time: the input carries the 1-hour
+    * watermark, so late rows are dropped, and a user's count is removed
+    * once the watermark passes the user's last `ts` plus [[IdleTimeoutMs]]
+    * — 30 min of event-time idleness ([[expireAfterIdle]]). A user
+    * returning after that restarts from 1. State therefore holds only the
+    * users seen within the last 90 min of event time. Expiry emits
+    * nothing: the output stream is the running count of every live user. */
+  def runningUserCounts(events: Dataset[Event]): Dataset[(Long, Long)] = {
     import events.sparkSession.implicits._
-    val timeoutConf = if (stateTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        org.apache.spark.sql.streaming.OutputMode.Update, timeoutConf) {
+    events.withWatermark("ts", watermarkDelay)
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[(Long, Long), (Long, Long)](
+        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
         (uid, rows, state) =>
           if (state.hasTimedOut) {
             state.remove() // idle user: drop the count, emit nothing
             Iterator.empty
           } else {
-            val n = state.getOption.getOrElse(0L) + rows.size
-            state.update(n)
-            if (stateTtlMs > 0) state.setTimeoutDuration(stateTtlMs)
+            // state: (count, last event ts in epoch ms)
+            val (n0, last0) = state.getOption.getOrElse((0L, Long.MinValue))
+            val (n, last) = rows.foldLeft((n0, last0)) {
+              case ((c, t), e) => (c + 1, math.max(t, e.ts.getTime))
+            }
+            state.update((n, last))
+            expireAfterIdle(state, last)
             Iterator((uid, n))
           }
       }

@@ -30,13 +30,14 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("identical docs share identical minhash signatures") {
-    val sh = DedupOps.shingles(docs(
-      1L -> "the quick brown fox jumps over", 2L -> "the quick brown fox jumps over"))
-    val sigs = DedupOps.minhashSignatures(sh).collect()
-      .groupBy(_.getLong(0)).view.mapValues(
-        _.map(r => (r.getLong(1), r.getString(2))).toSet).toMap
+    // q21's signing path: the native minhash_sigs column
+    val sigs = docs(
+      1L -> "the quick brown fox jumps over", 2L -> "the quick brown fox jumps over")
+      .select(col("doc_id"), MinHashExprs.minhash_sigs(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(sigs(1L) == sigs(2L))
     assert(sigs(1L).size == DedupOps.NumHashes)
+    assert(sigs(1L).distinct.size == DedupOps.NumHashes) // one min per seed
   }
 
   test("jaccard is exact on crafted overlap") {

@@ -1,9 +1,14 @@
 package graft
 
+import java.sql.Timestamp
+
+import graft.TestSpark.{stateRows, withConf}
 import graft.dedup.DedupOps
+import graft.functions.MinHashExprs
 import graft.streaming.StreamingDedup
 import graft.streaming.StreamingDedup.Doc
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingDedupSpec extends AnyFunSuite {
@@ -14,22 +19,29 @@ class StreamingDedupSpec extends AnyFunSuite {
   private val aNear = "quick brown fox jumps over the lazy dog tonight" // first token dropped
   private val other = "completely unrelated words about spark shuffle partitions here"
 
+  private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+  private def plusHours(t: Timestamp, h: Int) = new Timestamp(t.getTime + h * 3600000L)
+
+  private def pairs(table: String): Set[(Long, Long)] =
+    spark.table(table).select("i", "j").distinct().collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("row-local band signatures match the batch DataFrame pipeline") {
     import spark.implicits._
     val docs = Seq((1L, a), (2L, aNear)).toDF("doc_id", "text")
-    val batchSigs = DedupOps.minhashSignatures(DedupOps.shingles(docs))
-      .collect().groupBy(_.getLong(0)).view
-      .mapValues(_.sortBy(_.getLong(1)).map(_.getString(2)).toSeq).toMap
+    // reference: the batch shingles, then in plain Scala the per-seed
+    // min of md5("h|shingle") and the md5 of each band's concatenation
+    val shingles = DedupOps.shingles(docs).collect()
+      .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSeq).toMap
+    def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val rowsPerBand = DedupOps.NumHashes / DedupOps.Bands
     for ((id, text) <- Seq(1L -> a, 2L -> aNear)) {
-      val local = StreamingDedup.bandSignatures(text).toMap
-      // batch band sig = md5 of concatenated minhashes, recompute here
-      val md = java.security.MessageDigest.getInstance("MD5")
-      (0 until DedupOps.Bands).foreach { b =>
-        val concat = batchSigs(id).slice(b * rowsPerBand, (b + 1) * rowsPerBand).mkString
-        val expect = md.digest(concat.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        assert(local(b.toLong) == expect, s"doc $id band $b")
-      }
+      val minhashes = (0 until DedupOps.NumHashes).map(h =>
+        shingles(id).map(s => md5(s"$h|$s")).min)
+      val expect = minhashes.grouped(rowsPerBand).map(b => md5(b.mkString))
+        .zipWithIndex.map { case (sig, b) => (b.toLong, sig) }.toSeq
+      assert(StreamingDedup.bandSignatures(text) == expect, s"doc $id")
     }
   }
 
@@ -37,21 +49,17 @@ class StreamingDedupSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[Doc]
-    // stateTtlMs = 0 (NoTimeout): processAllAvailable never terminates
-    // once a processing-time timeout keeps requesting no-data batches
-    val q = StreamingDedup.candidates(src.toDS(), stateTtlMs = 0)
+    val q = StreamingDedup.candidates(src.toDS())
       .writeStream.format("memory").queryName("neardup_cand")
       .outputMode("append").start()
-    src.addData(Doc(1, a), Doc(3, other))
+    src.addData(Doc(1, a, t0), Doc(3, other, t0))
     q.processAllAvailable()
     assert(spark.table("neardup_cand").count() == 0) // nothing collides yet
-    src.addData(Doc(2, aNear))
+    src.addData(Doc(2, aNear, t0))
     q.processAllAvailable()
-    val pairs = spark.table("neardup_cand")
-      .select("i", "j").distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((1L, 2L)))
+    assert(pairs("neardup_cand") == Set((1L, 2L)))
     // replaying the same doc adds no new pairs (bucket state remembers it)
-    src.addData(Doc(2, aNear))
+    src.addData(Doc(2, aNear, t0))
     q.processAllAvailable()
     val after = spark.table("neardup_cand")
       .select("i", "j").distinct().count()
@@ -59,67 +67,80 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(after == 1)
   }
 
-  test("bucket state expires after the processing-time TTL") {
+  test("bucket state expires after 30 min of event-time idleness") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // With a processing-time timeout the engine keeps scheduling
-    // no-data batches, so neither processAllAvailable nor AvailableNow
-    // ever drains (see the operator scaladoc). Assert by POLLING the
-    // committed state through the statestore data source instead: the
-    // bucket id-sets must appear, then SHRINK to zero once the TTL
-    // passes — with no new input — then repopulate for late arrivals.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
     val src = MemoryStream[Doc]
-    // 5 s TTL: long enough that the statestore-read poll jobs (~0.5 s
-    // each) between two within-TTL arrivals cannot expire the bucket,
-    // short enough that the expiry phase stays well inside the await
-    val q = StreamingDedup.candidates(src.toDS(), stateTtlMs = 5000)
-      .writeStream.format("memory").queryName("neardup_ttl")
-      .option("checkpointLocation", ckpt)
+    val q = StreamingDedup.candidates(src.toDS())
+      .writeStream.format("memory").queryName("neardup_expiry")
       .outputMode("append").start()
-    def stateKeys(): Long =
-      try spark.read.format("statestore").load(ckpt).count()
-      catch { case _: Throwable => -1L } // no snapshot committed yet
-    def awaitTrue(what: String)(cond: => Boolean): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(cond, s"timed out waiting for: $what")
+    val t2h = plusHours(t0, 2)
+    try {
+      src.addData(Doc(1, a, t0))
+      q.processAllAvailable()
+      assert(stateRows(q) == 4, "doc 1's four band buckets")
+      // an unrelated doc 2 h later moves the watermark to t0 + 1 h, past
+      // the expiry of doc 1's buckets at t0 + 30 min: the no-data batch
+      // that follows drops them
+      src.addData(Doc(3, other, t2h))
+      q.processAllAvailable()
+      assert(stateRows(q) == 4, "only doc 3's buckets are left")
+      src.addData(Doc(2, aNear, t2h))
+      q.processAllAvailable()
+      assert(spark.table("neardup_expiry").count() == 0,
+        "no candidate pair: doc 1 was forgotten before doc 2 arrived")
+      // live buckets still collide: docs 1 and 2 arrive in one batch
+      src.addData(Doc(1, a, t2h), Doc(2, aNear, t2h))
+      q.processAllAvailable()
+      assert(pairs("neardup_expiry") == Set((1L, 2L)))
+    } finally q.stop()
+  }
+
+  test("a doc behind the eviction watermark in a back-to-back batch still pairs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[Doc]
+    // with no no-data batches, a batch drops late rows by the watermark
+    // of the batch before it, but evicts by its own, higher one
+    val q = withConf("spark.sql.streaming.noDataMicroBatches.enabled", "false") {
+      StreamingDedup.candidates(src.toDS())
+        .writeStream.format("memory").queryName("neardup_back_to_back")
+        .outputMode("append").start()
     }
     try {
-      src.addData(Doc(1, a))
-      awaitTrue("doc 1's four band buckets in state")(stateKeys() == 4)
-      // TTL fires on the engine's own no-data batches — no new input;
-      // ~5 s of wall clock passes inside this await
-      awaitTrue("state shrinks to zero after the TTL")(stateKeys() == 0)
-      src.addData(Doc(2, aNear))
-      awaitTrue("doc 2's fresh buckets in state")(stateKeys() == 4)
-      assert(spark.table("neardup_ttl").count() == 0,
-        "no candidate pair: doc 1 was forgotten before doc 2 arrived")
-      // liveness: docs 1 and 2 arrive in ONE batch, so the pair
-      // emission cannot race the TTL — even if doc 2's buckets expired
-      // during the asserts above (GC pause, loaded CI), the two docs
-      // collide within the batch itself and the pair is emitted
-      src.addData(Doc(1, a), Doc(2, aNear))
-      awaitTrue("live buckets emit the candidate pair")(
-        spark.table("neardup_ttl").filter("i = 1 AND j = 2").count() > 0)
+      src.addData(Doc(1, a, t0))
+      q.processAllAvailable()
+      src.addData(Doc(3, other, plusHours(t0, 3)))
+      q.processAllAvailable()
+      // doc 2 at t0 + 10 min is behind the eviction watermark (t0 + 2 h)
+      // but not behind the late-row one (t0 - 1 h), and 10 min after doc 1
+      src.addData(Doc(2, aNear, new Timestamp(t0.getTime + 10 * 60000L)))
+      q.processAllAvailable()
+      assert(q.isActive && q.exception.isEmpty)
+      assert(pairs("neardup_back_to_back") == Set((1L, 2L)))
     } finally q.stop()
   }
 
   test("streaming candidates agree with the batch LSH candidates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(Doc(1, a), Doc(2, aNear), Doc(3, other),
-      Doc(4, other + " extended with more unrelated tokens"))
-    val batch = DedupOps.lshCandidates(DedupOps.minhashSignatures(
-      DedupOps.shingles(corpus.map(d => (d.doc_id, d.text)).toDF("doc_id", "text"))))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val corpus = Seq(Doc(1, a, t0), Doc(2, aNear, t0), Doc(3, other, t0),
+      Doc(4, other + " extended with more unrelated tokens", t0))
+    // q22's batch path: the native band_sigs column, then the bucket
+    // self-join
+    val bandSigs = corpus.map(d => (d.doc_id, d.text)).toDF("doc_id", "text")
+      .select(col("doc_id"),
+        posexplode(MinHashExprs.band_sigs(col("text"))).as(Seq("band", "sig")))
+      .select(col("doc_id"), col("band").cast("long").as("band"), col("sig"))
+    val batch = DedupOps.candidatesFromBandSigs(bandSigs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(batch.contains((1L, 2L)))
     val src = MemoryStream[Doc]
-    val q = StreamingDedup.candidates(src.toDS(), stateTtlMs = 0)
+    val q = StreamingDedup.candidates(src.toDS())
       .writeStream.format("memory").queryName("neardup_all")
       .outputMode("append").start()
     corpus.foreach { d => src.addData(d); q.processAllAvailable() }
-    val streamed = spark.table("neardup_all")
-      .select("i", "j").distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val streamed = pairs("neardup_all")
     q.stop()
     assert(streamed == batch)
   }
