@@ -40,7 +40,7 @@ object Bench {
   /** plan_hash_v2 normalization: scrubs expression and plan ids, the
     * sfDir path prefix, JVM lambda identifiers
     * (ClassName$$Lambda$123/0x00007f...@4ac1b2c3) and object identity
-    * hashes (TopKByScore@713d2fe8), so identical code hashes the same
+    * hashes (TopKBuffer@713d2fe8), so identical code hashes the same
     * across runs and hosts. An identity hash follows an identifier, so
     * only an `@hex` right after one is scrubbed: `'@beef'` in a string
     * literal is data and stays. */

@@ -1,7 +1,7 @@
 package graft.engine
 
+import graft.functions.TopKScoreId.graft_topk
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Term-frequency vectorization + sparse cosine similarity + per-key
@@ -57,7 +57,7 @@ object SimilarityOps {
   /** J1 + T3 — top-k cosine neighbors of every doc in the query-side
     * TF relation (e.g. a semi-joined single document for the online
     * recommend path, where the tiny query side broadcasts):
-    * inverted-index join on term, exact integer dot, ranking window
+    * inverted-index join on term, exact integer dot, one-pass top-k
     * with deterministic tie-break. Returns `(i, j, rn, cos)`. */
   def cosineTopKFrom(tfQueries: DataFrame, tf: DataFrame, k: Int): DataFrame =
     rankTopKRounded(cosinePairs(tfQueries, tf), k)
@@ -91,14 +91,20 @@ object SimilarityOps {
   def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
-  /** Rank `(i, j, cos)` pairs per i: (cos desc, j asc), keep k.
-    * Returns unrounded `(i, j, rn, cos)`. */
-  def rankTopK(sims: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("i")).orderBy(desc("cos"), asc("j"))
-    sims.withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .select("i", "j", "rn", "cos")
-  }
+  /** Rank `(i, j, cos)` pairs (`j` a long, `cos` a double) per i:
+    * (cos desc, j asc), keep k. Returns unrounded `(i, j, rn, cos)`.
+    * One pass through the `graft_topk` aggregate: at most k (cos, j)
+    * entries per i in the buffer, combined map-side, so only k rows
+    * per i cross the shuffle (a `row_number()` window, the oracle
+    * SQL's form, shuffles and sorts every pair). `cos` orders as Spark
+    * sorts doubles (NaN highest), so the ranks are the window's,
+    * except that a pair with a null `cos` is skipped where the window
+    * ranks it last. */
+  def rankTopK(sims: DataFrame, k: Int): DataFrame =
+    sims.groupBy("i").agg(graft_topk(col("cos"), col("j"), k).as("top"))
+      .select(col("i"), posexplode(col("top")).as(Seq("p", "e")))
+      .select(col("i"), col("e.id").as("j"), (col("p") + 1).cast("long").as("rn"),
+        col("e.score").as("cos"))
 
   /** [[rankTopK]] with `cos` rounded to 6 places — the output form of
     * every cosine and ANN top-k query. */

@@ -7,26 +7,32 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Bounded top-k buffer: at most k (score, id) pairs, ordered by
-  * (score desc, id asc) — the engine's T3 tie rule. Kept simple
-  * (sorted array, k is small) rather than a heap; replace the trim
-  * with a binary heap if k grows. */
+  * (score desc, id asc) — the engine's T3 tie rule. Scores compare as
+  * Spark sorts doubles (`SQLOrderingUtil.compareDoubles`): NaN above
+  * every number and equal to itself, -0.0 equal to 0.0, so the kept
+  * pairs are the ones `row_number()` over the same order ranks first.
+  * Kept simple (sorted array, k is small) rather than a heap; replace
+  * the trim with a binary heap if k grows. */
 final class TopKBuffer(val k: Int) {
   var scores: Array[Double] = Array.empty
   var ids: Array[Long] = Array.empty
 
+  /** Whether (s, id) ranks before entry `at`. */
+  private def before(s: Double, id: Long, at: Int): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(s, scores(at))
+    c > 0 || (c == 0 && id < ids(at))
+  }
+
   def insert(score: Double, id: Long): Unit = {
     val n = scores.length
-    if (n < k || score > scores(n - 1) ||
-      (score == scores(n - 1) && id < ids(n - 1))) {
-      // find insertion point (score desc, id asc)
+    if (n < k || before(score, id, n - 1)) {
       var i = 0
-      while (i < n && (scores(i) > score ||
-        (scores(i) == score && ids(i) < id))) i += 1
+      while (i < n && !before(score, id, i)) i += 1
       val m = math.min(n + 1, k)
       val ns = new Array[Double](m); val ni = new Array[Long](m)
       System.arraycopy(scores, 0, ns, 0, i)
@@ -47,11 +53,12 @@ final class TopKBuffer(val k: Int) {
 /** T3 top-k as a native `TypedImperativeAggregate` (SURVEY.md §4 item
   * 3): one pass, at most k entries per group in the buffer, partial
   * aggregation map-side — only k (score, id) pairs per key cross the
-  * shuffle. Sibling of the typed-Aggregator form
-  * ([[TopKByScore]]); this one lives in the expression layer (usable
-  * from SQL / Column without Dataset encoders) and keeps primitive
-  * buffers. Output: array<struct<score double, id long>> ranked by
-  * (score desc, id asc). */
+  * shuffle. The engine's one top-k: `SimilarityOps.rankTopK` (every
+  * cosine and ANN top-k), q46's centroid ranking and q45 all run
+  * through it. Lives in the expression layer (usable from Column
+  * without Dataset encoders) and keeps primitive buffers. Rows with a
+  * null score or id are skipped. Output: array<struct<score double,
+  * id long>> ranked by (score desc, id asc). */
 case class TopKScoreId(
     left: Expression, // score
     right: Expression, // id

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.ann.EmbeddingOps
 import graft.engine.{Q, SimilarityOps, Tables}
-import graft.functions.VecExprs
+import graft.functions.{TopKScoreId, VecExprs}
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor suite over `embeddings`
@@ -21,7 +21,7 @@ object AnnQueries {
     // array-form vectors: the 64-row-per-vector long form (join on d +
     // hash agg per pair) collapses to one row-local fold per pair — the
     // 50-query side broadcasts and the corpus streams through a single
-    // map stage before the ranking window
+    // map stage before the top-k aggregate
     val vecs = EmbeddingOps.quantizedVec(Tables(s, dir, "embeddings"))
     val a = vecs.filter(col("vec_id") < 50)
       .select(col("vec_id").as("i"), col("qv").as("va"), col("n2").as("n2i"))
@@ -133,7 +133,6 @@ object AnnQueries {
       |probes AS (SELECT vec_id AS i, cid FROM ranked WHERE rk <= 4 AND vec_id < 50),
       |cand AS (SELECT DISTINCT i, j FROM probes JOIN assign USING (cid) WHERE j <> i),
       |${EmbeddingOps.rankTailSql(5)}""".stripMargin) { (s, dir) =>
-    import org.apache.spark.sql.expressions.Window
     // the assignment pass — every vector against every centroid — is a
     // broadcast cross join over array-form rows (one 64-element fold
     // per pair) instead of a 64x long-form join + hash aggregation of
@@ -144,12 +143,16 @@ object AnnQueries {
     val asims = vecs.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("cid"), SimilarityOps.cosine(
         VecExprs.dot_q(col("qv"), col("qc")), col("n2"), col("nc")).as("acos"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("acos"), asc("cid"))
-    val ranked = asims.withColumn("rk", row_number().over(w))
+    // each vector's 4 nearest centroids, best first: position 0 is its
+    // assignment, positions < 4 are the probes of a query vector
+    val ranked = asims.groupBy("vec_id")
+      .agg(TopKScoreId.graft_topk(col("acos"), col("cid"), 4).as("top"))
+      .select(col("vec_id"), posexplode(col("top")).as(Seq("p", "e")))
+      .select(col("vec_id"), col("e.id").as("cid"), col("p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = ranked.filter(col("rk") === 1)
+    val assign = ranked.filter(col("p") === 0)
       .select(col("vec_id").as("j"), col("cid"))
-    val probes = ranked.filter(col("rk") <= 4 && col("vec_id") < 50)
+    val probes = ranked.filter(col("vec_id") < 50)
       .select(col("vec_id").as("i"), col("cid"))
     val cand = broadcast(probes).join(assign, Seq("cid"))
       .filter(col("j") =!= col("i")).select("i", "j").distinct()

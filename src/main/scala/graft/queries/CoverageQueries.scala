@@ -115,36 +115,6 @@ object CoverageQueries {
       .orderBy("op", "c_custkey")
   }
 
-  /** The window-form oracle shared by q40 and q45: each customer's
-    * top-3 orders by price, order key breaking ties. */
-  private val top3OrdersSql =
-    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-      |SELECT o_custkey, o_orderkey, o_totalprice,
-      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin
-
-  /** §2.11 UDAF — q11's per-customer top-3 recomputed through the
-    * one-pass bounded-buffer [[graft.functions.TopKByScore]] aggregator
-    * instead of a ranking window; the oracle is the window form, so
-    * the hash-match proves the fused aggregate is semantics-identical. */
-  val q40 = Q("q40_topk_aggregate", top3OrdersSql) {
-    (s, dir) =>
-      import s.implicits._
-      val topk = new graft.functions.TopKByScore(3).toColumn
-      Tables(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .agg(topk.name("top"))
-        .flatMap { case (cust, top) =>
-          top.zipWithIndex.map { case ((price, orderKey), idx) =>
-            (cust, (idx + 1).toLong, orderKey, price)
-          }
-        }
-        .toDF("o_custkey", "rn", "o_orderkey", "o_totalprice")
-        .orderBy("o_custkey", "rn")
-  }
-
   private val priorities = Seq("1-URGENT", "2-HIGH", "3-MEDIUM",
     "4-NOT SPECIFIED", "5-LOW")
 
@@ -198,11 +168,17 @@ object CoverageQueries {
         .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
   }
 
-  /** §2.11/§4-3 — the same top-3-per-customer computed through the
-    * native `TypedImperativeAggregate` ([[graft.functions.TopKScoreId]])
-    * — expression-layer, primitive buffers, k-bounded shuffle; the
-    * window-form oracle again proves semantic identity. */
-  val q45 = Q("q45_topk_imperative", top3OrdersSql) {
+  /** §2.11 UDAF / §4-3 — q11's per-customer top-3 orders by price
+    * (order key breaking ties) computed through the native
+    * `TypedImperativeAggregate` ([[graft.functions.TopKScoreId]]):
+    * expression-layer, primitive buffers, k-bounded shuffle. The oracle
+    * is the ranking-window form, so the hash-match proves the fused
+    * aggregate is semantics-identical. */
+  val q45 = Q("q45_topk_imperative",
+    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
+      |SELECT o_custkey, o_orderkey, o_totalprice,
+      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
+      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) {
     (s, dir) =>
       Tables(s, dir, "orders")
         .groupBy("o_custkey")
@@ -214,5 +190,5 @@ object CoverageQueries {
         .orderBy("o_custkey", "rn")
   }
 
-  def all: Seq[Q] = Seq(q36, q37, q38, q39, q40, q43, q44, q45)
+  def all: Seq[Q] = Seq(q36, q37, q38, q39, q43, q44, q45)
 }

@@ -38,10 +38,10 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("plan_hash_v2 normalization scrubs identity hashes, not literals") {
-    val plan = "Filter (text#12 = '@beef') TopKByScore@713d2fe8 " +
+    val plan = "Filter (text#12 = '@beef') TopKBuffer@713d2fe8 " +
       "Topk$@1a2b Scan parquet /data/sf/documents.parquet"
     assert(Bench.normalizeV2(plan, "/data/sf") ==
-      "Filter (text#x = '@beef') TopKByScore@x " +
+      "Filter (text#x = '@beef') TopKBuffer@x " +
         "Topk$@x Scan parquet <SF_DIR>/documents.parquet")
   }
 

@@ -1,20 +1,26 @@
 package graft
 
-import graft.functions.{TopKBuffer, TopKByScore, TopKScoreId}
+import graft.engine.SimilarityOps
+import graft.functions.{TopKBuffer, TopKScoreId}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** TopKBuffer edge cases, plus both top-k aggregates — the typed
-  * TopKByScore and the graft_topk expression — against the ranking
-  * window they replace. */
+/** TopKBuffer edge cases, plus the engine's two top-k entry points —
+  * the graft_topk aggregate and `SimilarityOps.rankTopK` built on it —
+  * against `row_number()` over the same order, the oracle SQL's form. */
 class TopKImperativeSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.session
 
+  /** A score as its bits, so NaN equals NaN and -0.0 differs from 0.0:
+    * a kept row must carry its own score, not one equal to it. */
+  private def exact(top: Seq[(Double, Long)]): Seq[(Long, Long)] =
+    top.map { case (s, id) => (java.lang.Double.doubleToLongBits(s), id) }
+
   /** Per group `g`, the (score, id) list `row_number()` over (score
-    * desc, id asc) keeps; asserts TopKByScore and graft_topk keep the
+    * desc, id asc) keeps; asserts graft_topk and rankTopK keep the
     * same lists. */
   private def assertAgree(rows: Seq[(Long, Long, Double)], k: Int)
       : Map[Long, Seq[(Double, Long)]] = {
@@ -25,18 +31,24 @@ class TopKImperativeSpec extends AnyFunSuite {
       .filter(col("rn") <= k).collect().toSeq
       .groupBy(_.getLong(0)).view.mapValues(_.sortBy(_.getInt(3))
         .map(r => (r.getDouble(2), r.getLong(1)))).toMap
-    val typed = df.as[(Long, Long, Double)].groupByKey(_._1)
-      .agg(new TopKByScore(k).toColumn.name("top")).collect().toMap
     val native = df.groupBy("g")
       .agg(TopKScoreId.graft_topk(col("score"), col("id"), k).as("top"))
       .collect().map(r => r.getLong(0) ->
         r.getSeq[Row](1).map(e => (e.getDouble(0), e.getLong(1)))).toMap
-    assert(typed == window, "TopKByScore vs row_number()")
-    assert(native == window, "graft_topk vs row_number()")
+    val ranked = SimilarityOps.rankTopK(
+      df.select(col("g").as("i"), col("id").as("j"), col("score").as("cos")), k)
+      .collect().toSeq.groupBy(_.getLong(0)).view.mapValues(_.sortBy(_.getLong(2)))
+      .toMap
+    assert(ranked.values.forall(rs => rs.map(_.getLong(2)) == (1L to rs.length)),
+      "rankTopK numbers each list 1..n")
+    val want = window.view.mapValues(exact).toMap
+    assert(native.view.mapValues(exact).toMap == want, "graft_topk vs row_number()")
+    assert(ranked.view.mapValues(rs => exact(rs.map(r => (r.getDouble(3), r.getLong(1)))))
+      .toMap == want, "rankTopK vs row_number()")
     window
   }
 
-  test("typed and native top-k agree with row_number() on equal scores") {
+  test("graft_topk and rankTopK agree with row_number() on equal scores") {
     val rows = Seq((1L, 5L, 2.0), (1L, 3L, 2.0), (1L, 9L, 2.0),
       (1L, 1L, 1.0), (1L, 4L, 2.0), (2L, 8L, 0.5), (2L, 7L, 0.5),
       (2L, 6L, 0.5), (2L, 2L, 0.25))
@@ -45,7 +57,7 @@ class TopKImperativeSpec extends AnyFunSuite {
     assert(top(2L) == Seq((0.5, 6L), (0.5, 7L), (0.5, 8L)))
   }
 
-  test("typed and native top-k agree with row_number() on groups smaller than k") {
+  test("graft_topk and rankTopK agree with row_number() on groups smaller than k") {
     val rows = Seq((1L, 10L, 3.0), (1L, 11L, 4.0), (2L, 20L, 1.0),
       (3L, 30L, 2.0), (3L, 31L, 2.0), (3L, 32L, 5.0))
     val top = assertAgree(rows, 5)
@@ -54,12 +66,29 @@ class TopKImperativeSpec extends AnyFunSuite {
     assert(top(3L) == Seq((5.0, 32L), (2.0, 30L), (2.0, 31L)))
   }
 
-  test("typed and native top-k agree with row_number() at k = 1") {
+  test("graft_topk and rankTopK agree with row_number() at k = 1") {
     val rows = Seq((1L, 4L, 9.0), (1L, 2L, 9.0), (1L, 1L, 8.0),
       (2L, 7L, -1.0), (2L, 6L, -2.0), (3L, 5L, 0.0))
     val top = assertAgree(rows, 1)
     assert(top == Map(1L -> Seq((9.0, 2L)), 2L -> Seq((-1.0, 7L)),
       3L -> Seq((0.0, 5L))))
+  }
+
+  test("graft_topk and rankTopK agree with row_number() on NaN and signed zeros") {
+    // Spark sorts NaN above every number and equal to itself, and -0.0
+    // equal to 0.0, so both tie on id; NaN arrives after the buffers fill
+    val nan = Double.NaN
+    val rows = Seq((1L, 1L, 1.0), (1L, 2L, 2.0), (1L, 3L, 3.0), (1L, 5L, nan),
+      (1L, 4L, nan), (2L, 9L, 0.0), (2L, 8L, -0.0), (2L, 7L, -1.0),
+      (2L, 6L, -0.0), (3L, 12L, 1.0), (3L, 11L, nan), (3L, 10L, Double.PositiveInfinity))
+    val top = assertAgree(rows, 2)
+    assert(exact(top(1L)) == exact(Seq((nan, 4L), (nan, 5L))))
+    assert(exact(top(2L)) == exact(Seq((-0.0, 6L), (-0.0, 8L))))
+    assert(exact(top(3L)) == exact(Seq((nan, 11L), (Double.PositiveInfinity, 10L))))
+    val b = new TopKBuffer(3)
+    Seq((0.0, 9L), (1.0, 3L), (-0.0, 2L), (nan, 7L), (nan, 5L))
+      .foreach { case (s, i) => b.insert(s, i) }
+    assert(exact(b.entries) == exact(Seq((nan, 5L), (nan, 7L), (1.0, 3L))))
   }
 
   test("buffer keeps k best with (score desc, id asc) ties") {

@@ -7,11 +7,13 @@ parquet dumps (schema + row-for-row values, columns sorted by name).
 Driver-side tooling only — the shipped Scala library has no Python
 dependency. Usage: python3 tools/check.py [sfdir] [outdir] [--no-verify]
 """
-import json, math, subprocess, sys
+import json, math, os, subprocess, sys
 
 import duckdb
 import pandas as pd
 
+# the checkout this script belongs to, so an exported copy checks itself
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -20,7 +22,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 if "--no-verify" not in sys.argv:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     sys.stdout.write(r.stdout[-3000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-3000:])
