@@ -25,7 +25,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Old count()-based numbers are preserved in OPTIMIZATION_r21.md.
   *
   * Plan observability (r21): per query, a deterministic hash of the
-  * normalized static plan plus Exchange/BroadcastExchange counts is
+  * normalized static plan plus Exchange/BroadcastExchange counts and
+  * `construct_jobs` (the Spark jobs started while the meta pass builds
+  * the query's DataFrame; 0 when construction plans only) is
   * written to SPARK_GRAFT_PLAN_META (default target/bench_plan_meta.json)
   * and echoed to stderr — seven rounds showed up-to-16x per-query
   * wall-time noise on identical bytecode, so plan identity, not
@@ -108,7 +110,12 @@ object Bench {
     // claims into measured bytes, including shuffles inside cached
     // relations that plan-walking misses under AQE/InMemoryRelation
     // wrappers. Additions-only: timed runs and stdout are untouched.
+    // The same listener counts each query's meta-pass jobs: those started
+    // while its DataFrame is built are its `construct_jobs` (0 when
+    // building the plan runs no Spark job).
     val stageToQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val jobsStarted = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
     val shuffleAgg =
       new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
     spark.sparkContext.addSparkListener(
@@ -120,6 +127,8 @@ object Bench {
             .getOrElse("")
           if (desc.startsWith("plan-meta: ")) {
             val q = desc.stripPrefix("plan-meta: ")
+            jobsStarted.computeIfAbsent(q,
+              _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
             js.stageIds.foreach(sid => stageToQuery.put(sid, q))
           }
         }
@@ -136,22 +145,25 @@ object Bench {
           }
         }
       })
-    def shuffleBytes(name: String): Option[(Long, Long)] = {
-      // listener bus is async — drain it deterministically so the last
-      // task-end events are counted (a fixed sleep undercounts on a
-      // loaded host)
+    // listener bus is async — drain it deterministically so the last
+    // job-start and task-end events are counted (a fixed sleep
+    // undercounts on a loaded host)
+    def drained[T](read: => T): T = {
       org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-      Option(shuffleAgg.get(name)).map(a => (a(0), a(1)))
+      read
     }
+    def shuffleBytes(name: String): Option[(Long, Long)] =
+      drained(Option(shuffleAgg.get(name)).map(a => (a(0), a(1))))
     // deterministic static-plan fingerprint: expression ids and plan
     // ids normalized out, so identical code → identical hash across
     // runs/VMs while any real plan change flips it. clearCache runs in
     // a finally so a failing query cannot leak cache entries into the
     // next query's planning.
     def planMeta(name: String, fn: (SparkSession, String) => DataFrame)
-        : Option[(String, Int, Int, Option[(Long, Long)])] =
+        : Option[(String, Int, Int, Int, Option[(Long, Long)])] =
       try {
         val df = fn(spark, sfDir)
+        val constructJobs = drained(Option(jobsStarted.get(name)).fold(0)(_.get))
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -167,7 +179,7 @@ object Bench {
           runOnce(fn(spark, sfDir))
           shuffleBytes(name)
         } catch { case e: Throwable => failed(name, "shuffle-meta", e); None }
-        Some((hashV2, shuffles, bcasts, sb))
+        Some((hashV2, shuffles, bcasts, constructJobs, sb))
       } catch { case e: Throwable => failed(name, "plan-meta", e); None }
       finally {
         try spark.catalog.clearCache() catch { case _: Throwable => () }
@@ -188,10 +200,11 @@ object Bench {
       name -> planMeta(name, fn)
     }
     val metaJson = metas.map { case (n, meta) =>
-      val planJson = meta.map { case (h2, ex, bc, sb) =>
+      val planJson = meta.map { case (h2, ex, bc, cj, sb) =>
         val sbJson = sb.map { case (b, r) =>
           s""","shuffle_bytes":$b,"shuffle_records":$r""" }.getOrElse("")
-        s""""plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc$sbJson"""
+        s""""plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc,""" +
+          s""""construct_jobs":$cj$sbJson"""
       }
       val errJson = errors.get(n).map(e => s""""error":${Verify.jsonString(e)}""")
       s""""$n":""" + (planJson ++ errJson).mkString("{", ",", "}")
@@ -205,11 +218,11 @@ object Bench {
         s"${e.getClass.getName}: ${e.getMessage}")
     }
     metas.foreach {
-      case (n, Some((h2, ex, bc, sb))) =>
+      case (n, Some((h2, ex, bc, cj, sb))) =>
         val sbTxt = sb.map { case (b, r) => s" shuffleBytes=$b records=$r" }
           .getOrElse("")
         System.err.println(
-          s"[plan] $n v2=$h2 exchanges=$ex broadcasts=$bc$sbTxt")
+          s"[plan] $n v2=$h2 exchanges=$ex broadcasts=$bc constructJobs=$cj$sbTxt")
       case (n, None) => System.err.println(s"[plan] $n hash=unavailable")
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

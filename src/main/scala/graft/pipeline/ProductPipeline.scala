@@ -4,6 +4,7 @@ import graft.engine.{CleanOps, SimilarityOps, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The reference's complete program — E1 batch EDA, E2 offline index
   * build, E3 online recommend (`/root/reference/amazon1.py`) — as one
@@ -11,15 +12,34 @@ import org.apache.spark.sql.functions._
   * (FIXTURES.md §A). Each stage is a pure DataFrame function; the
   * driver-table generalizations live in `graft.queries`, this is the
   * faithful end-to-end replica. Building a stage's DataFrame runs no
-  * Spark job, except in `loadCsv`: it infers the CSV schema and counts
-  * each partition's rows eagerly, because the dense `row_id` needs them.
+  * Spark job, except in `loadCsv`: it counts each partition's rows
+  * eagerly, because the dense `row_id` needs them.
   */
 object ProductPipeline {
 
-  /** S2 — CSV scan with header + schema inference (`amazon1.py:24-25`)
-    * and a stable `row_id` captured immediately at read (SURVEY.md
-    * §7.4.1: pandas row-order semantics — dedup keep-first, stable
-    * ties, first-match lookup — need a total order).
+  /** The products CSV's declared schema: the 9 reference columns
+    * (FIXTURES.md §A), all STRING. The dirty numeric columns stay text
+    * for [[clean]], whatever a batch happens to hold. */
+  val ProductSchema: StructType = StructType(Seq("name", "main_category",
+    "sub_category", "image", "link", "ratings", "no_of_ratings",
+    "discount_price", "actual_price").map(StructField(_, StringType)))
+
+  /** The neighbor index's declared schema: the `(i, j, rn, cos)` rows
+    * that [[buildIndex]] ranks (`SimilarityOps.rankTopK` over `row_id`s). */
+  val IndexSchema: StructType =
+    StructType.fromDDL("i BIGINT, j BIGINT, rn BIGINT, cos DOUBLE")
+
+  /** S2 — CSV scan with header (`amazon1.py:24-25`), read with the
+    * declared [[ProductSchema]] instead of inferring it, and a stable
+    * `row_id` captured immediately at read (SURVEY.md §7.4.1:
+    * pandas row-order semantics — dedup keep-first, stable ties,
+    * first-match lookup — need a total order).
+    *
+    * Header rule: each file's header must name the declared columns in
+    * the declared order (`enforceSchema=false`). A header that does not
+    * fails the load with Spark's "CSV header does not conform to the
+    * schema" error, instead of its columns being shifted by position
+    * into the declared names.
     *
     * Scale-safe id derivation, Catalyst-native (r22): `row_id` is the
     * same 0-based (partition, offset) total order that r21's RDD
@@ -35,10 +55,11 @@ object ProductPipeline {
     * Both the count job and the final read plan the same file splits
     * (same session, files and conf → deterministic planning), which
     * PipelineSpec's repeated-load determinism test pins; if they ever
-    * diverge, the read fails (see the guard below). */
+    * diverge, the read fails (see the guard below). The count job is
+    * the only job this function runs. */
   def loadCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(path)
+    val raw = spark.read.schema(ProductSchema).option("header", "true")
+      .option("enforceSchema", "false").csv(path)
     val mid = monotonically_increasing_id()
     val offsetMask = (1L << 33) - 1
     val counts = raw.select(shiftright(mid, 33).as("pid"))
@@ -149,12 +170,13 @@ object ProductPipeline {
 
   /** Persist / reload the neighbor index (`amazon1.py:155`: build
     * once, amortize across queries — SURVEY.md §4 "materialized
-    * neighbor table"). Parquet keeps it queryable by any session. */
+    * neighbor table"). Parquet keeps it queryable by any session;
+    * the reload reads it with the declared [[IndexSchema]]. */
   def saveIndex(neighbors: DataFrame, path: String): Unit =
     neighbors.write.mode("overwrite").parquet(path)
 
   def loadIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(IndexSchema).parquet(path)
 
   /** E3 — `get_similar_products` (`amazon1.py:181-202`) as one lazy
     * plan: a lookup, then a gather. The query id is one aggregate over

@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.engine.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 /** Structured-Streaming forms of the engine's event operators
   * (SURVEY.md §2.12): the same semantics as the batch EventQueries
@@ -40,16 +41,11 @@ object StreamingOps {
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)
 
-  /** Schema for file-based streaming reads of the events table: `ts`
-    * is the file's microsecond timestamp without a time zone, as
-    * the batch EventQueries read it. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
+  /** Schema for file-based streaming reads of the events table: the
+    * catalog's declared `events` schema, so `ts` is the file's
+    * microsecond timestamp without a time zone, as the batch
+    * EventQueries read it. */
+  val rawSchema: StructType = Tables.schema("events")
 
   /** `readStream` over a directory of events parquet files (the
     * streaming source tails the directory for new files — the

@@ -107,21 +107,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(base.columns.nonEmpty && neighbors.columns.nonEmpty)
     val queries = Seq("Dell Wireless Mouse WM126", "oneplus-nord-ce-2-lite",
       "no-such-product-xyz", "")
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    val recs = try {
-      val built = queries.map(q => q -> P.recommend(base, neighbors, q))
-      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
-      built
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() == 0, "building a recommend plan started a job")
+    val (recs, jobs) = TestSpark.withJobCount(
+      queries.map(q => q -> P.recommend(base, neighbors, q)))
+    assert(jobs == 0, "building a recommend plan started a job")
     val dell = Seq(
       Seq(1L, "Dell Wired Mouse MS116", 4.0, 2345.0, 399.0, 799.0,
         "IMGDELL2", "dell-wired-mouse-ms116/dp/B02"),
@@ -161,6 +149,10 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
     P.saveIndex(neighbors, dir)
     val loaded = P.loadIndex(spark, dir)
+    // the declared schema is the saved one (a parquet read makes every
+    // column nullable), and the same rows come back
+    assert(loaded.dtypes.toSeq == neighbors.dtypes.toSeq)
+    assert(loaded.collect().toSet == neighbors.collect().toSet)
     val direct = P.recommend(base, neighbors, "Dell Wireless Mouse WM126")
       .collect().map(_.toSeq).toSeq
     val viaDisk = P.recommend(base, loaded, "Dell Wireless Mouse WM126")
@@ -203,8 +195,11 @@ class PipelineSpec extends AnyFunSuite {
     // rows where the count job saw 3: offsets 3..5 have no counted row
     // and would collide with the next partition's ids
     val file = java.nio.file.Files.createTempFile("graft_diverge", ".csv")
-    val before = "name,n\nalpha,100\nbravo,200\ncharl,300\n"
-    val after = "name,n\naa,1\nbb,2\ncc,3\ndd,4\nee,5\nff,6\n"
+    val csv = (names: Seq[String]) =>
+      (P.ProductSchema.fieldNames.toSeq +: names.map(_ +: Seq.fill(8)("")))
+        .map(_.mkString(",") + "\n").mkString
+    val before = csv(Seq("alpha-one-xyz", "bravo-two-xyz", "charl-thr-xyz"))
+    val after = csv(Seq("aa", "bb", "cc", "dd", "ee", "ff"))
     assert(before.length == after.length)
     java.nio.file.Files.write(file, before.getBytes("UTF-8"))
     val df = P.loadCsv(spark, file.toString)
@@ -212,6 +207,32 @@ class PipelineSpec extends AnyFunSuite {
     val e = intercept[Exception](df.select("row_id").collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("loadCsv:")), e)
+  }
+
+  private def tempCsv(lines: Seq[String]): String = {
+    val file = java.nio.file.Files.createTempFile("graft_products", ".csv")
+    java.nio.file.Files.write(file, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    file.toString
+  }
+
+  test("S2: a batch of clean numbers loads with the fixture's column types") {
+    // inference typed such a batch's ratings DOUBLE and its counts and
+    // prices INT; the declared schema keeps the fixture's strings
+    val batch = tempCsv(Seq(P.ProductSchema.fieldNames.mkString(","),
+      "Mouse A,electronics,accessories,a.jpg,a-link,4.5,120,599,1099",
+      "Mouse B,electronics,accessories,b.jpg,b-link,3.9,75,349,799"))
+    assert(P.loadCsv(spark, batch).schema == raw.schema)
+  }
+
+  test("S2: loadCsv fails on a header with two columns swapped") {
+    val cols = P.ProductSchema.fieldNames.toSeq
+    val swapped = cols.updated(5, cols(6)).updated(6, cols(5))
+    val csv = tempCsv(Seq(swapped.mkString(","),
+      "Mouse A,electronics,accessories,a.jpg,a-link,120,4.5,599,1099"))
+    val e = intercept[Exception](P.loadCsv(spark, csv).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("CSV header does not conform to the schema")), e)
   }
 
   test("E1: top-10 sorts by count desc with nulls last") {

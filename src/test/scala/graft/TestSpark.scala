@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** One shared local SparkSession across all suites (forked test JVM),
-  * and the state metrics the streaming suites read. */
+  * the state metrics the streaming suites read, and a job counter. */
 object TestSpark {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
@@ -26,6 +27,24 @@ object TestSpark {
   /** State rows after that batch. */
   def stateRows(q: StreamingQuery): Long =
     lastStateful(q).stateOperators(0).numRowsTotal
+
+  /** Runs `body` and returns its value with the number of Spark jobs
+    * that started meanwhile, counted by a `SparkListener`. */
+  def withJobCount[T](body: => T): (T, Int) = {
+    val sc = session.sparkContext
+    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Runs `body` with the session conf `key` set to `value`, then puts
     * the previous value back. */
