@@ -27,7 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Plan observability (r21): per query, a deterministic hash of the
   * normalized static plan plus Exchange/BroadcastExchange counts and
   * `construct_jobs` (the Spark jobs started while the meta pass builds
-  * the query's DataFrame; 0 when construction plans only) is
+  * the query's DataFrame; 0 when construction plans only), and the
+  * meta pass's `jobs` and completed `stages` (construction plus one
+  * noop execution; skipped stages do not count) is
   * written to SPARK_GRAFT_PLAN_META (default target/bench_plan_meta.json)
   * and echoed to stderr — seven rounds showed up-to-16x per-query
   * wall-time noise on identical bytecode, so plan identity, not
@@ -110,14 +112,16 @@ object Bench {
     // claims into measured bytes, including shuffles inside cached
     // relations that plan-walking misses under AQE/InMemoryRelation
     // wrappers. Additions-only: timed runs and stdout are untouched.
-    // The same listener counts each query's meta-pass jobs: those started
-    // while its DataFrame is built are its `construct_jobs` (0 when
-    // building the plan runs no Spark job).
+    // The same listener counts each query's meta-pass jobs and completed
+    // stages; the jobs started while its DataFrame is built are its
+    // `construct_jobs` (0 when building the plan runs no Spark job).
     val stageToQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val jobsStarted = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicInteger]()
-    val shuffleAgg =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+    // per query: shuffle bytes, shuffle records, jobs, completed stages
+    val metaAgg = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+    def add(q: String, i: Int, n: Long): Unit = {
+      val acc = metaAgg.computeIfAbsent(q, _ => new Array[Long](4))
+      acc.synchronized { acc(i) += n }
+    }
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -127,43 +131,41 @@ object Bench {
             .getOrElse("")
           if (desc.startsWith("plan-meta: ")) {
             val q = desc.stripPrefix("plan-meta: ")
-            jobsStarted.computeIfAbsent(q,
-              _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet()
+            add(q, 2, 1)
             js.stageIds.foreach(sid => stageToQuery.put(sid, q))
           }
+        }
+        override def onStageCompleted(
+            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+          val q = stageToQuery.get(sc.stageInfo.stageId)
+          if (q != null && sc.stageInfo.failureReason.isEmpty) add(q, 3, 1)
         }
         override def onTaskEnd(
             te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
           val q = stageToQuery.get(te.stageId)
           if (q != null && te.taskMetrics != null) {
-            val acc = shuffleAgg.computeIfAbsent(q, _ => Array(0L, 0L))
-            val sw = te.taskMetrics.shuffleWriteMetrics
-            acc.synchronized {
-              acc(0) += sw.bytesWritten
-              acc(1) += sw.recordsWritten
-            }
+            add(q, 0, te.taskMetrics.shuffleWriteMetrics.bytesWritten)
+            add(q, 1, te.taskMetrics.shuffleWriteMetrics.recordsWritten)
           }
         }
       })
     // listener bus is async — drain it deterministically so the last
     // job-start and task-end events are counted (a fixed sleep
     // undercounts on a loaded host)
-    def drained[T](read: => T): T = {
+    def counters(name: String): Array[Long] = {
       org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-      read
+      Option(metaAgg.get(name)).fold(new Array[Long](4))(_.clone)
     }
-    def shuffleBytes(name: String): Option[(Long, Long)] =
-      drained(Option(shuffleAgg.get(name)).map(a => (a(0), a(1))))
     // deterministic static-plan fingerprint: expression ids and plan
     // ids normalized out, so identical code → identical hash across
     // runs/VMs while any real plan change flips it. clearCache runs in
     // a finally so a failing query cannot leak cache entries into the
     // next query's planning.
     def planMeta(name: String, fn: (SparkSession, String) => DataFrame)
-        : Option[(String, Int, Int, Int, Option[(Long, Long)])] =
+        : Option[(String, Int, Int, Long, Option[Array[Long]])] =
       try {
         val df = fn(spark, sfDir)
-        val constructJobs = drained(Option(jobsStarted.get(name)).fold(0)(_.get))
+        val constructJobs = counters(name)(2)
         val qe = df.queryExecution
         val plan = qe.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -173,11 +175,12 @@ object Bench {
         val tree = qe.executedPlan.toString
         val bcasts = "BroadcastExchange".r.findAllMatchIn(tree).length
         val shuffles = "\\bExchange\\b".r.findAllMatchIn(tree).length
-        // one extra noop execution to measure shuffle bytes (outside
-        // the timed runs; the warmup made codegen costs already sunk)
+        // one extra noop execution to measure shuffle bytes, jobs and
+        // stages (outside the timed runs; the warmup made codegen costs
+        // already sunk)
         val sb = try {
           runOnce(fn(spark, sfDir))
-          shuffleBytes(name)
+          Some(counters(name))
         } catch { case e: Throwable => failed(name, "shuffle-meta", e); None }
         Some((hashV2, shuffles, bcasts, constructJobs, sb))
       } catch { case e: Throwable => failed(name, "plan-meta", e); None }
@@ -201,8 +204,9 @@ object Bench {
     }
     val metaJson = metas.map { case (n, meta) =>
       val planJson = meta.map { case (h2, ex, bc, cj, sb) =>
-        val sbJson = sb.map { case (b, r) =>
-          s""","shuffle_bytes":$b,"shuffle_records":$r""" }.getOrElse("")
+        val sbJson = sb.map { case Array(b, r, j, st) =>
+          s""","shuffle_bytes":$b,"shuffle_records":$r,"jobs":$j,"stages":$st""" }
+          .getOrElse("")
         s""""plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc,""" +
           s""""construct_jobs":$cj$sbJson"""
       }
@@ -219,8 +223,8 @@ object Bench {
     }
     metas.foreach {
       case (n, Some((h2, ex, bc, cj, sb))) =>
-        val sbTxt = sb.map { case (b, r) => s" shuffleBytes=$b records=$r" }
-          .getOrElse("")
+        val sbTxt = sb.map { case Array(b, r, j, st) =>
+          s" shuffleBytes=$b records=$r jobs=$j stages=$st" }.getOrElse("")
         System.err.println(
           s"[plan] $n v2=$h2 exchanges=$ex broadcasts=$bc constructJobs=$cj$sbTxt")
       case (n, None) => System.err.println(s"[plan] $n hash=unavailable")

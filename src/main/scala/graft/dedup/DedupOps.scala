@@ -16,71 +16,37 @@ import org.apache.spark.sql.functions._
   * Method inventory (each a first-class `queries()` entry):
   *  - exact dedup: normalized-text md5 fingerprint, keep-first
   *  - MinHash: per-doc signature = min over shingles of md5(seed|shingle)
-  *  - LSH banding: band signature join → candidate pairs → exact
-  *    Jaccard verification (only candidates are verified — the scale
-  *    path for unbounded corpora)
+  *  - LSH banding: band signature join → candidate pairs
+  *    ([[candidatesFromBandSigs]]) → exact Jaccard of each candidate's
+  *    shingle-key arrays ([[verifyPairs]]; only candidates are verified —
+  *    the scale path for unbounded corpora)
   *  - SimHash: weighted token-hash bit votes (long form)
   *  - n-gram Jaccard: exact shingle-inverted-index pair similarity
+  *
+  * Every shingle comes from the one row-local shingler,
+  * [[MinHashLocal.shingles]], through the native MinHash columns; the
+  * `...Sql` methods are the oracle's relational renderings of the same
+  * values.
   */
 object DedupOps {
 
   val NumHashes = 16
   val Bands = 4
 
-  /** Word 3-gram shingles, distinct per doc: `(doc_id, shingle)`.
-    *
-    * Shuffle-free construction: the token array never leaves its doc
-    * row — three staggered `slice`s zipped elementwise give the
-    * trigrams directly, so no per-token window sort (the r1 `lead`
-    * window shuffled+sorted every token row; at 100 TB that sort IS
-    * the job). The only shuffle left is the `distinct`. */
-  def shingles(docs: DataFrame): DataFrame =
-    shinglesRaw(docs).distinct()
-
-  /** As [[shingles]] but WITHOUT the per-doc distinct — callers that
-    * re-key the shingle (e.g. [[shingleKeysRaw]]) dedup on the smaller
-    * key instead of paying a string-payload shuffle here. */
-  def shinglesRaw(docs: DataFrame): DataFrame = {
-    val n3 = greatest(size(col("toks")) - 2, lit(0))
-    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), explode(arrays_zip(
-        slice(col("toks"), lit(1), n3).as("t0"),
-        slice(col("toks"), lit(2), n3).as("t1"),
-        slice(col("toks"), lit(3), n3).as("t2"))).as("g"))
-      .select(col("doc_id"),
-        concat_ws(" ", col("g.t0"), col("g.t1"), col("g.t2")).as("shingle"))
-  }
-
-  /** 60-bit shingle keys per doc, NOT distinct: `(doc_id, sk: long)`
-    * where `sk = conv(substr(md5(shingle), 1, 15), 16, 10)`. The
-    * 15-hex→long conversion is injective, so Spark joining/grouping on
-    * the LONG has IDENTICAL equality classes to the oracle grouping on
-    * the 15-char md5 prefix STRING ([[shingleKeysSql]]) — any 60-bit
-    * collision collides in both engines the same way, keeping the
-    * comparison exact. Longs cut the inverted-index join's shuffle
-    * payload and hashing cost ~3× vs raw shingle strings (the q24 r2
-    * regression was allocation pressure in exactly that string-keyed
-    * stretch). Callers that re-partition by `sk` first (q24) get the
-    * distinct, and any downstream sk-keyed join, for free on that one
-    * exchange.
-    * r22: the key derivation is the native
-    * [[graft.functions.MinHashExprs.shingle_sk]] column — identical
-    * values to `conv(substr(md5(shingle), 1, 15), 16, 10) :: long`
-    * (OpsSpec pins it), one thread-local digest per shingle instead of
-    * builtin md5's per-call getInstance + hex string + conv parse. */
-  def shingleKeysRaw(docs: DataFrame): DataFrame =
-    shinglesRaw(docs)
-      .select(col("doc_id"),
-        graft.functions.MinHashExprs.shingle_sk(col("shingle")).as("sk"))
-
-  /** Oracle rendering of the distinct [[shingleKeysRaw]] over a
-    * shingle relation — DuckDB keeps the string prefix as the key (no
-    * 64-bit hex→int cast needed): equality classes match the Spark
-    * longs exactly. */
+  /** Oracle rendering of the engine's shingle keys
+    * ([[MinHashLocal.shingleKeys]] behind the native `shingle_keys`
+    * column) over a shingle relation. The engine keys a shingle by
+    * `conv(substr(md5(shingle), 1, 15), 16, 10)` as a long; DuckDB keeps
+    * the 15-hex prefix string (no 64-bit hex→int cast needed). The
+    * conversion is injective, so the equality classes are identical:
+    * any 60-bit collision collides in both engines the same way. Longs
+    * cut the inverted-index join's shuffle payload and hashing cost
+    * ~3× against shingle strings. */
   def shingleKeysSql(shinglesRel: String): String =
     s"SELECT DISTINCT doc_id, substr(md5(shingle), 1, 15) AS sk FROM $shinglesRel"
 
-  /** DuckDB rendering of [[shingles]] over relation `docs(doc_id, text)`. */
+  /** DuckDB rendering of [[MinHashLocal.shingles]] — the distinct word
+    * 3-grams — over relation `docs(doc_id, text)`, as `(doc_id, shingle)`. */
   def shinglesSql(docsRel: String): String =
     s"""SELECT DISTINCT doc_id, shingle FROM (
        |SELECT doc_id, tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
@@ -149,29 +115,27 @@ object DedupOps {
        |ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id""".stripMargin
   }
 
-  /** Jaccard similarity for given `(i, j)` pairs over distinct shingle
-    * KEYS — integer intersection/union, so the double division is
-    * bit-identical across engines. Exact when `key` holds the shingles
-    * themselves; q22/q24 feed 60-bit md5-prefix keys instead, where
-    * distinct shingles collide with probability ~2⁻⁶⁰ per pair, so the
-    * result is exact up to that (negligible, but not zero). */
-  def jaccard(pairs: DataFrame, sh: DataFrame, key: String = "shingle"): DataFrame = {
-    val counts = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    // candidate pairs are few (LSH-bounded) — broadcast them so the big
-    // shingle relation streams through hash joins without a shuffle
-    val inter = broadcast(pairs)
-      .join(sh.select(col("doc_id").as("i"), col(key)), Seq("i"))
-      .join(sh.select(col("doc_id").as("j"), col(key)), Seq("j", key))
-      .groupBy("i", "j").agg(count(lit(1)).as("inter"))
-    // inter is the small (candidate-bounded) side; per-doc counts scale
-    // with the corpus, so broadcast inter and stream counts past it
-    val withNa = broadcast(inter)
-      .join(counts.select(col("doc_id").as("i"), col("n").as("na")), Seq("i"))
-    broadcast(withNa)
-      .join(counts.select(col("doc_id").as("j"), col("n").as("nb")), Seq("j"))
-      .select(col("i"), col("j"), col("inter"), col("na"), col("nb"),
-        (col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")).cast("double")).as("jaccard"))
+  /** Exact Jaccard of candidate pairs `(i, j)` over each doc's distinct
+    * shingle keys `(doc_id, keys)` (the native `shingle_keys` column),
+    * row by row: `inter = size(array_intersect(ka, kb))`, `na`, `nb` the
+    * array sizes, all BIGINT, and their integer ratio as a double, so
+    * the division is bit-identical across engines. Keys are 60-bit md5
+    * prefixes: exact up to a ~2⁻⁶⁰ collision per pair, as in the oracle.
+    * A pair sharing no key stays, with `inter = 0`. Candidates are few
+    * (LSH-bounded), so both lookups broadcast the pair side. The counts
+    * are declared nullable (a null text has null keys), though a
+    * candidate's never are. */
+  def verifyPairs(pairs: DataFrame, keyed: DataFrame): DataFrame = {
+    val withA = broadcast(pairs)
+      .join(keyed.select(col("doc_id").as("i"), col("keys").as("ka")), Seq("i"))
+    broadcast(withA)
+      .join(keyed.select(col("doc_id").as("j"), col("keys").as("kb")), Seq("j"))
+      .select(col("i"), col("j"),
+        size(array_intersect(col("ka"), col("kb"))).cast("long").as("inter"),
+        size(col("ka")).cast("long").as("na"),
+        size(col("kb")).cast("long").as("nb"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")).cast("double"))
   }
 
   /** SimHash bit votes in long form `(doc_id, b, bit)` for b in

@@ -11,10 +11,12 @@ import graft.engine.TextOps
   * Scala, byte-identical to the relational form the q21/q22 oracle SQL
   * computes ([[DedupOps.minhashSignaturesSql]],
   * [[DedupOps.lshCandidatesSql]]; StreamingDedupSpec also pins it
-  * against a plain md5 reference). Used by the native columns
-  * (`graft.functions.MinHashExprs.minhash_sigs` / `band_sigs`) and the
-  * streaming dedup operator: signing needs no shuffle at all — the
-  * whole corpus is signed map-side and only bucket joins shuffle.
+  * against a plain md5 reference). [[shingles]] is the engine's only
+  * shingler: the native columns (`graft.functions.MinHashExprs`
+  * `minhash_sigs` / `band_sigs` / `shingle_keys`, behind q21, q22 and
+  * q24) and the streaming dedup operator all split documents here.
+  * Signing needs no shuffle at all — the whole corpus is signed
+  * map-side and only bucket joins shuffle.
   */
 object MinHashLocal {
 
@@ -33,8 +35,8 @@ object MinHashLocal {
   }
 
   /** Distinct word 3-gram shingles; empty for null docs or docs under
-    * 3 tokens (null tolerance matches [[DedupOps.shingles]] and the
-    * null-safe native expressions — a null text must not kill a
+    * 3 tokens (null tolerance matches the oracle's [[DedupOps.shinglesSql]]
+    * and the null-safe native expressions — a null text must not kill a
     * streaming query). */
   def shingles(text: String): Set[String] = {
     if (text == null) return Set.empty
@@ -116,7 +118,7 @@ object MinHashLocal {
     * one thread-local digest call instead of the builtin md5's
     * per-call MessageDigest.getInstance + 32-char hex string +
     * substring + base-16 string parse. */
-  def sk60(shingleUtf8: Array[Byte]): Long = {
+  private def sk60(shingleUtf8: Array[Byte]): Long = {
     val md = digests.get()
     md.reset()
     val b = md.digest(shingleUtf8)
@@ -127,6 +129,16 @@ object MinHashLocal {
       ((b(6) & 0xffL) << 8) | (b(7) & 0xffL)
     be >>> 4
   }
+
+  /** The doc's distinct 60-bit shingle keys, ascending; empty for
+    * shingle-less docs. Distinct on the key, not the shingle: the
+    * oracle groups by the 15-hex md5 prefix
+    * ([[DedupOps.shingleKeysSql]]), and the hex→long conversion is
+    * injective, so two shingles whose prefixes collide count once in
+    * both engines. */
+  def shingleKeys(text: String): Array[Long] =
+    shingles(text).iterator.map(s => sk60(s.getBytes(StandardCharsets.UTF_8)))
+      .toArray.distinct.sorted
 
   /** The 4 band signatures (md5 of each band's concatenated
     * minhashes), band order; empty for shingle-less docs. */

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.engine.{CleanOps, SimilarityOps, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -115,12 +114,15 @@ object ProductPipeline {
 
   /** F2 — whole-row dedup, keep FIRST occurrence by row_id (pandas
     * `drop_duplicates` keep='first', `amazon1.py:119-122`; nulls
-    * compare equal within the key, matching pandas). */
+    * compare equal within the key, matching pandas). One aggregate:
+    * the key is every other column, so the group's min row_id names
+    * the kept row and the key columns are that row's values. Grouping
+    * normalizes floating-point keys (-0.0 reads back as 0.0, every NaN
+    * as the canonical NaN). Columns keep `df`'s order. */
   def dedupKeepFirst(df: DataFrame): DataFrame = {
     val keyCols = df.columns.filterNot(_ == "row_id").map(col _)
-    val w = Window.partitionBy(keyCols: _*).orderBy(col("row_id"))
-    df.withColumn("dup_rn", row_number().over(w))
-      .filter(col("dup_rn") === 1).drop("dup_rn")
+    df.groupBy(keyCols: _*).agg(min(col("row_id")).as("row_id"))
+      .select(df.columns.map(col _): _*)
   }
 
   /** T1 — top-10 by cleaned ratings count (`amazon1.py:63-64`); pandas

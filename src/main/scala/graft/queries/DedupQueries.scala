@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.dedup.DedupOps
 import graft.engine.{Q, SimilarityOps, Tables, TextOps}
+import graft.functions.MinHashExprs
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite over `documents` — exact, MinHash, LSH-banded
@@ -39,7 +40,7 @@ object DedupQueries {
     // non-empty input split), and signing is the CPU cost
     Tables.spread(Tables(s, dir, "documents").select("doc_id", "text"))
       .select(col("doc_id"),
-        posexplode(graft.functions.MinHashExprs.minhash_sigs(col("text")))
+        posexplode(MinHashExprs.minhash_sigs(col("text")))
           .as(Seq("h", "minhash")))
       .select(col("doc_id"), col("h").cast("long").as("h"), col("minhash"))
       .orderBy("doc_id", "h")
@@ -48,7 +49,16 @@ object DedupQueries {
   /** LSH-banded near-dup detection over the augmented corpus:
     * candidates from 4-band bucket collisions, then exact-Jaccard
     * verification of candidates only, threshold 0.5. The scale path —
-    * cost is bounded by bucket collisions, never all-pairs. */
+    * cost is bounded by bucket collisions, never all-pairs.
+    *
+    * One map-side pass per doc computes its band signatures and its
+    * distinct shingle keys (both from [[graft.dedup.MinHashLocal]]'s one
+    * shingler) and persists them once; that relation feeds the bucket
+    * self-join and the row-by-row verification of every candidate. The
+    * trade-off: the cache holds every doc's keys (about 8 bytes per
+    * shingle), where keying only the candidates would cache less, but
+    * would re-read and re-tokenize the candidate docs in a second pass
+    * over the corpus. */
   val q22 = Q("q22_lsh_neardup",
     s"""WITH docs AS (${DedupOps.augmentedSql}),
       |sh AS (${DedupOps.shinglesSql("docs")}),
@@ -65,45 +75,24 @@ object DedupQueries {
       |FROM inter JOIN cnt na ON na.doc_id = i JOIN cnt nb ON nb.doc_id = j
       |WHERE CAST(inter AS DOUBLE) / CAST(na.n + nb.n - inter AS DOUBLE) >= 0.5
       |ORDER BY i, j""".stripMargin) { (s, dir) =>
-    // sign row-locally (native `band_sigs` column — no shuffle),
-    // bucket-join for candidates, then build shingle sets ONLY for
-    // candidate docs: the full corpus never pays the explode+window
-    // shingle pipeline, just one map-side signing pass
-    // r22: spread keyed by doc_id — same bytes as round-robin, and the
-    // shk branch's (doc_id, sk) distinct + per-doc counts then run on
-    // THIS exchange (the separate repartition(doc_id) it used is gone)
-    val docs = Tables.spread(
-      DedupOps.augmented(Tables(s, dir, "documents")), col("doc_id"))
+    val docs = Tables.spread(DedupOps.augmented(Tables(s, dir, "documents")))
+      .select(col("doc_id"),
+        MinHashExprs.band_sigs(col("text")).as("sigs"),
+        MinHashExprs.shingle_keys(col("text")).as("keys"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // repartition by the join key BEFORE persisting: the cached
     // partitioning serves both sides of the (band, sig) self-join, so
-    // the join itself is exchange-free (2 post-cache exchanges → 0)
+    // the join itself is exchange-free (AQE does not reuse one exchange
+    // above a cache for both sides; the signatures would shuffle twice)
     val bandSigs = docs
-      .select(col("doc_id"),
-        posexplode(graft.functions.MinHashExprs.band_sigs(col("text")))
-          .as(Seq("band", "sig")))
+      .select(col("doc_id"), posexplode(col("sigs")).as(Seq("band", "sig")))
       .select(col("doc_id"), col("band").cast("long").as("band"), col("sig"))
       .repartition(col("band"), col("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // cand feeds the id-set, the jaccard inter join, and the result —
-    // persist or the band-sig self-join re-executes per branch
-    val cand = DedupOps.candidatesFromBandSigs(bandSigs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candIds = cand.select(col("i").as("doc_id"))
-      .unionByName(cand.select(col("j").as("doc_id"))).distinct()
-    // verification joins on 60-bit md5-prefix longs, not shingle
-    // strings — identical equality classes (see DedupOps.shingleKeysRaw),
-    // a fraction of the shuffle bytes; the doc_id repartition feeds the
-    // (doc_id, sk) distinct AND the per-doc counts aggregation off one
-    // exchange
-    // the docs spread above is doc_id-keyed and survives the broadcast
-    // semi-join and the shingle explode, so the (doc_id, sk) distinct
-    // and the per-doc counts aggregate here without any exchange of
-    // their own (r21 needed an explicit repartition(doc_id) for this)
-    val shk = DedupOps.shingleKeysRaw(
-        docs.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    DedupOps.jaccard(cand, shk, key = "sk")
+    // a candidate always has shingles (only shingled docs get band
+    // signatures), and a pair with inter = 0 fails the threshold, so
+    // row-by-row verification gives the oracle's inner-join rows
+    DedupOps.verifyPairs(DedupOps.candidatesFromBandSigs(bandSigs), docs)
       .filter(col("jaccard") >= 0.5)
       .orderBy("i", "j")
   }
@@ -143,15 +132,16 @@ object DedupQueries {
       |WHERE CAST(inter AS DOUBLE) / CAST(na.n + nb.n - inter AS DOUBLE) >= 0.2
       |ORDER BY i, j""".stripMargin) { (s, dir) =>
     // the inverted index is keyed by 60-bit md5-prefix longs, not
-    // shingle strings: identical equality classes (DedupOps.shingleKeysRaw)
+    // shingle strings: identical equality classes (DedupOps.shingleKeysSql)
     // and ~3× less shuffle/allocation in the df²-heavy self-join — the
     // exact stretch that regressed under allocation pressure in r2
     // ONE exchange establishes the sk partitioning that the distinct
     // AND both sides of the inverted-index self-join then reuse
     // (HashPartitioning(sk) satisfies the (doc_id, sk) aggregation and
     // the sk equi-join): 3 full-data exchanges → 1
-    val sh = DedupOps.shingleKeysRaw(Tables.spread(
-        DedupOps.augmented(Tables(s, dir, "documents"))))
+    val sh = Tables.spread(DedupOps.augmented(Tables(s, dir, "documents")))
+      .select(col("doc_id"),
+        explode(MinHashExprs.shingle_keys(col("text"))).as("sk"))
       .repartition(col("sk"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -21,12 +21,18 @@ class OpsSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
+  /** `conv(substr(md5(s), 1, 15), 16, 10)` in plain Scala. */
+  private def sk(shingle: String): Long = java.lang.Long.parseLong(
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(shingle.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
+
   test("shingles: word 3-grams, distinct, none for short docs") {
     // NB tokens are 2+ chars (sklearn \w\w+ pattern) — 1-char words drop
-    val sh = DedupOps.shingles(docs(
-      1L -> "aa bb cc dd", 2L -> "xx yy", 3L -> "pp pp pp pp pp"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(sh == Set((1L, "aa bb cc"), (1L, "bb cc dd"), (3L, "pp pp pp")))
+    val keys = docs(1L -> "aa bb cc dd", 2L -> "xx yy", 3L -> "pp pp pp pp pp")
+      .select(col("doc_id"), MinHashExprs.shingle_keys(col("text")))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(keys == Map(1L -> Seq("aa bb cc", "bb cc dd").map(sk).sorted,
+      2L -> Seq(), 3L -> Seq(sk("pp pp pp"))))
   }
 
   test("identical docs share identical minhash signatures") {
@@ -41,13 +47,16 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("jaccard is exact on crafted overlap") {
-    val sh = DedupOps.shingles(docs(
+    // q22's verification over the shingle_keys column
+    val keyed = docs(
       1L -> "aa bb cc dd ee", // shingles: aa-bb-cc bb-cc-dd cc-dd-ee
-      2L -> "bb cc dd ee ff")) // shingles: bb-cc-dd cc-dd-ee dd-ee-ff
+      2L -> "bb cc dd ee ff") // shingles: bb-cc-dd cc-dd-ee dd-ee-ff
+      .select(col("doc_id"), MinHashExprs.shingle_keys(col("text")).as("keys"))
     import spark.implicits._
     val pairs = Seq((1L, 2L)).toDF("i", "j")
-    val j = DedupOps.jaccard(pairs, sh).collect().head
+    val j = DedupOps.verifyPairs(pairs, keyed).collect().head
     assert(j.getLong(2) == 2L) // inter
+    assert(j.getLong(3) == 3L && j.getLong(4) == 3L) // na, nb
     assert(j.getDouble(5) == 2.0 / 4.0)
   }
 
@@ -221,7 +230,7 @@ class OpsSpec extends AnyFunSuite {
     "graft_stem" -> StemText.graft_stem(col("text")),
     "minhash_sigs" -> MinHashExprs.minhash_sigs(col("text")),
     "band_sigs" -> MinHashExprs.band_sigs(col("text")),
-    "shingle_sk" -> MinHashExprs.shingle_sk(col("text")),
+    "shingle_keys" -> MinHashExprs.shingle_keys(col("text")),
     "quantize_vec" -> VecExprs.quantize_vec(col("emb"), EmbeddingOps.QuantScale),
     "dot_q" -> VecExprs.dot_q(col("a"), col("b")),
     "bucket_strs" -> VecExprs.bucket_strs(col("qv"), 4))
@@ -280,16 +289,28 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("shingle_sk matches conv(substr(md5, 1, 15), 16, 10)") {
+  test("shingle_keys equals the distinct md5-prefix keys of Spark's trigrams") {
     import spark.implicits._
-    val df = Seq("aa bb cc", "the quick brown", "x" * 200, "", "ünïcode ok")
-      .toDF("shingle")
-    val rows = df.select(
-      graft.functions.MinHashExprs.shingle_sk(col("shingle")).as("native"),
-      conv(substring(md5(col("shingle").cast("binary")), 1, 15), 16, 10)
-        .cast("long").as("sql")).collect()
-    rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
-    assert(rows.forall(_.getLong(0) >= 0L))
+    val texts = Seq(null, "", "aa bb", "aa bb cc aa bb cc aa bb cc", "x" * 200,
+      "the quick brown fox", "İstanbul ÖZEL straße ΟΔΟΣ ok ab cd",
+      "ＡＢＣ ｄｅｆ ｇｈｉ ab cd ef", "ünïcode ok fine words")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val native = df.select(col("doc_id"), MinHashExprs.shingle_keys(col("text")))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1))).toMap
+    val reference = ReferenceShingles.trigrams(df)
+      .select(col("doc_id"), ReferenceShingles.key(col("shingle")).as("sk"))
+      .distinct().collect().groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(_.getLong(1)).toSet }
+    assert(native(0L).isEmpty) // a null text gives a null array
+    for ((id, keys) <- native - 0L) {
+      val ks = keys.get
+      assert(ks.distinct.size == ks.size, s"doc $id has a repeated key")
+      assert(ks.toSet == reference.getOrElse(id, Set.empty), s"doc $id")
+      assert(ks.forall(_ >= 0L))
+    }
+    // the cases reach both branches: some docs shingle, some do not
+    assert(reference.keySet == Set(3L, 5L, 6L, 7L, 8L))
   }
 
   test("Tables.spread spreads a single row group that plans many splits") {

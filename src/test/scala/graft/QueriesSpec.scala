@@ -37,6 +37,20 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("every q22 LSH row is an exact q24 inverted-index row") {
+    // q22 verifies its candidates row by row over the shingle-key arrays,
+    // q24 counts the same keys through the inverted-index self-join; a
+    // q22 row (jaccard >= 0.5) passes q24's 0.2 threshold, with the same
+    // inter, na, nb and jaccard
+    def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))).toMap
+    val lsh = rows("q22_lsh_neardup")
+    val exact = rows("q24_ngram_jaccard")
+    assert(lsh.nonEmpty)
+    for ((pair, v) <- lsh) assert(exact.get(pair).contains(v), s"pair $pair")
+  }
+
   test("plan_hash_v2 normalization scrubs identity hashes, not literals") {
     val plan = "Filter (text#12 = '@beef') TopKBuffer@713d2fe8 " +
       "Topk$@1a2b Scan parquet /data/sf/documents.parquet"

@@ -29,9 +29,9 @@ class StreamingDedupSpec extends AnyFunSuite {
   test("row-local band signatures match the batch DataFrame pipeline") {
     import spark.implicits._
     val docs = Seq((1L, a), (2L, aNear)).toDF("doc_id", "text")
-    // reference: the batch shingles, then in plain Scala the per-seed
+    // reference: Spark's trigrams, then in plain Scala the per-seed
     // min of md5("h|shingle") and the md5 of each band's concatenation
-    val shingles = DedupOps.shingles(docs).collect()
+    val shingles = ReferenceShingles.trigrams(docs).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getString(1)).toSeq).toMap
     def md5(s: String): String = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
