@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.status.api.v1.StageStatus
 
 /** Benchmark main (driver contract): times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
@@ -28,8 +31,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * normalized static plan plus Exchange/BroadcastExchange counts and
   * `construct_jobs` (the Spark jobs started while the meta pass builds
   * the query's DataFrame; 0 when construction plans only), and the
-  * meta pass's `jobs` and completed `stages` (construction plus one
-  * noop execution; skipped stages do not count) is
+  * meta pass's `jobs`, completed `stages` (construction plus one noop
+  * execution; skipped stages do not count) and their shuffle writes —
+  * all read from Spark's status store ([[runRecords]]), keyed by the
+  * meta pass's job description `plan-meta: <query>` — is
   * written to SPARK_GRAFT_PLAN_META (default target/bench_plan_meta.json)
   * and echoed to stderr — seven rounds showed up-to-16x per-query
   * wall-time noise on identical bytecode, so plan identity, not
@@ -54,6 +59,20 @@ object Bench {
       .replaceAll("\\$\\$?Lambda[$/][^,\\s)\\]]*", "\\$\\$Lambda\\$x")
       // {1,16}: Integer.toHexString of an identity hash can be one digit
       .replaceAll("([\\w$\\]])@[0-9a-f]{1,16}\\b", "$1@x")
+
+  /** One query's run records, read from Spark's status store: the jobs
+    * whose description is `description`, their completed stages
+    * (skipped stages do not count) and those stages' shuffle writes, as
+    * `Array(shuffle bytes, shuffle records, jobs, stages)` — measured
+    * bytes for "fewer or smaller exchanges" claims, shuffles inside
+    * cached relations included. Read right after the query runs: the
+    * store keeps only the latest jobs and stages. */
+  def runRecords(sc: SparkContext, description: String): Array[Long] = {
+    val (jobs, stages) = Bridge.jobRecords(sc, _.description.contains(description))
+    val done = stages.filter(_.status == StageStatus.COMPLETE)
+    Array(done.map(_.shuffleWriteBytes).sum, done.map(_.shuffleWriteRecords).sum,
+      jobs.size, done.map(_.stageId).distinct.size)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -105,57 +124,8 @@ object Bench {
       System.gc()
       dt
     }
-    // per-query shuffle-byte observability (r22): a SparkListener sums
-    // task-level shuffle-write bytes/records for the jobs of each
-    // query's meta-pass noop execution (matched via the thread-local
-    // job description) — turning "fewer/smaller exchanges at scale"
-    // claims into measured bytes, including shuffles inside cached
-    // relations that plan-walking misses under AQE/InMemoryRelation
-    // wrappers. Additions-only: timed runs and stdout are untouched.
-    // The same listener counts each query's meta-pass jobs and completed
-    // stages; the jobs started while its DataFrame is built are its
-    // `construct_jobs` (0 when building the plan runs no Spark job).
-    val stageToQuery = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    // per query: shuffle bytes, shuffle records, jobs, completed stages
-    val metaAgg = new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    def add(q: String, i: Int, n: Long): Unit = {
-      val acc = metaAgg.computeIfAbsent(q, _ => new Array[Long](4))
-      acc.synchronized { acc(i) += n }
-    }
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("")
-          if (desc.startsWith("plan-meta: ")) {
-            val q = desc.stripPrefix("plan-meta: ")
-            add(q, 2, 1)
-            js.stageIds.foreach(sid => stageToQuery.put(sid, q))
-          }
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val q = stageToQuery.get(sc.stageInfo.stageId)
-          if (q != null && sc.stageInfo.failureReason.isEmpty) add(q, 3, 1)
-        }
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val q = stageToQuery.get(te.stageId)
-          if (q != null && te.taskMetrics != null) {
-            add(q, 0, te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            add(q, 1, te.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          }
-        }
-      })
-    // listener bus is async — drain it deterministically so the last
-    // job-start and task-end events are counted (a fixed sleep
-    // undercounts on a loaded host)
-    def counters(name: String): Array[Long] = {
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-      Option(metaAgg.get(name)).fold(new Array[Long](4))(_.clone)
-    }
+    def counters(name: String): Array[Long] =
+      runRecords(spark.sparkContext, s"plan-meta: $name")
     // deterministic static-plan fingerprint: expression ids and plan
     // ids normalized out, so identical code → identical hash across
     // runs/VMs while any real plan change flips it. clearCache runs in

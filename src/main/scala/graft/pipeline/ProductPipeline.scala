@@ -24,7 +24,9 @@ object ProductPipeline {
     "discount_price", "actual_price").map(StructField(_, StringType)))
 
   /** The neighbor index's declared schema: the `(i, j, rn, cos)` rows
-    * that [[buildIndex]] ranks (`SimilarityOps.rankTopK` over `row_id`s). */
+    * that [[buildIndex]] ranks over `row_id`s. Its `cos` is rounded to
+    * 6 places, so this index is not a valid `SimilarityOps.mergeTopK`
+    * input (that needs the unrounded `rankTopK` table). */
   val IndexSchema: StructType =
     StructType.fromDDL("i BIGINT, j BIGINT, rn BIGINT, cos DOUBLE")
 
@@ -153,7 +155,11 @@ object ProductPipeline {
     * own semantics and is meant for the ≈10k-row products table; the
     * unbounded-corpus scale path is the LSH family in `graft.dedup`.
     * The vocabulary cap is the reference's `max_features=5000`.
-    * Returns `(i, j, rn, cos)` plus the deduped base as a pair. */
+    * Returns `(i, j, rn, cos)` plus the deduped base as a pair. The
+    * ranking is `SimilarityOps.cosineTopKFrom`, i.e. `rankTopKRounded`:
+    * `cos` is rounded to 6 places, so the index is not a valid
+    * `mergeTopK` input, which requires the unrounded `rankTopK` table
+    * (an incrementally maintained index is built with `rankTopK`). */
   def buildIndex(products: DataFrame, k: Int = 10): (DataFrame, DataFrame) = {
     val base = dedupKeepFirst(products)
       .na.drop(Seq("name"))

@@ -1,20 +1,15 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** One shared local SparkSession across all suites (forked test JVM),
-  * the state metrics the streaming suites read, and a job counter. */
+  * the mains' [[Session.local]] at 8 cores, the state metrics the
+  * streaming suites read, and a job counter. */
 object TestSpark {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(8)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -29,21 +24,14 @@ object TestSpark {
     lastStateful(q).stateOperators(0).numRowsTotal
 
   /** Runs `body` and returns its value with the number of Spark jobs
-    * that started meanwhile, counted by a `SparkListener`. */
+    * started meanwhile, on any thread: how far the highest job id in
+    * Spark's status store rose. */
   def withJobCount[T](body: => T): (T, Int) = {
-    val sc = session.sparkContext
-    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
+    def lastJob = Bridge.jobRecords(session.sparkContext, _ => true)._1
+      .map(_.jobId).maxOption.getOrElse(-1)
+    val before = lastJob
+    val out = body
+    (out, lastJob - before)
   }
 
   /** Runs `body` with the session conf `key` set to `value`, then puts

@@ -4,9 +4,13 @@
 Reads two ``bench_plan_meta.json`` files (written by ``graft.Bench`` to
 ``SPARK_GRAFT_PLAN_META``), typically one from the parent commit and one
 from a change, and prints every query whose ``plan_hash_v2``,
-``exchanges`` or ``broadcasts`` differ, that is missing from one side,
-or that has no plan on a side (its planning failed; the ``error`` field
-says why). Ends with a one-line summary.
+``exchanges``, ``broadcasts``, ``construct_jobs``, ``jobs`` or
+``stages`` differ, that is missing from one side, or that has no plan
+on a side (its planning failed; the ``error`` field says why). The job
+and stage counts are exact integers of a deterministic plan, and
+``construct_jobs`` is 0 for every query whose construction only plans;
+shuffle bytes and records are not compared. Ends with a one-line
+summary.
 
 Exit status: 0 when every query is identical, 1 on any difference.
 
@@ -15,7 +19,8 @@ Usage: python3 tools/plan_diff.py <parent.json> <change.json>
 import json
 import sys
 
-FIELDS = ("plan_hash_v2", "exchanges", "broadcasts")
+FIELDS = ("plan_hash_v2", "exchanges", "broadcasts", "construct_jobs", "jobs",
+          "stages")
 
 
 def load(path):
