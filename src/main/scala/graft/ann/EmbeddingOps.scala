@@ -70,16 +70,11 @@ object EmbeddingOps {
         .as(Seq("tbl", "bucket")))
       .select(col("vec_id"), col("tbl").cast("long").as("tbl"), col("bucket"))
 
-  /** Exact cosine top-k from array-form vectors `(vec_id, qv, n2)` for
-    * candidate pairs `(i, j)`: same integer dot / norms / IEEE chain /
-    * tie-break as the oracle's [[rankPairsSql]], but each pair costs
-    * one 64-element fold instead of 64 joined rows plus a hash
+  /** Unrounded exact cosine `(i, j, cos)` for candidate pairs `(i, j)`
+    * over array-form vectors `(vec_id, qv, n2)`: same integer dot /
+    * norms / IEEE chain as the oracle's [[rankPairsSql]], but each pair
+    * costs one 64-element fold instead of 64 joined rows plus a hash
     * aggregation. */
-  def rankPairsVec(vecs: DataFrame, pairs: DataFrame, k: Int): DataFrame =
-    SimilarityOps.rankTopKRounded(simsVec(vecs, pairs), k)
-
-  /** Unrounded exact cosine `(i, j, cos)` for candidate pairs over
-    * array-form vectors. */
   def simsVec(vecs: DataFrame, pairs: DataFrame): DataFrame =
     pairs
       .join(vecs.select(col("vec_id").as("i"), col("qv").as("va"),

@@ -54,19 +54,14 @@ object SimilarityOps {
   def docNorms(tf: DataFrame): DataFrame =
     tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
 
-  /** J1 + T3 — top-k cosine neighbors of every doc in the query-side
-    * TF relation (e.g. a semi-joined single document for the online
-    * recommend path, where the tiny query side broadcasts):
-    * inverted-index join on term, exact integer dot, one-pass top-k
-    * with deterministic tie-break. Returns `(i, j, rn, cos)`. */
-  def cosineTopKFrom(tfQueries: DataFrame, tf: DataFrame, k: Int): DataFrame =
-    rankTopKRounded(cosinePairs(tfQueries, tf), k)
-
-  /** Exact cosine for every (query, corpus) doc pair sharing a term:
-    * unrounded `(i, j, cos)`. Norms are per-doc self-norms, so the
-    * i-side norms come from the query relation and the j-side from
-    * the corpus relation — the two need not overlap (incremental
-    * merge joins old docs against a new-docs corpus side). */
+  /** J1 — exact cosine for every (query, corpus) doc pair sharing a
+    * term: unrounded `(i, j, cos)`. Inverted-index join on term, exact
+    * integer dot; the query side (e.g. a semi-joined single document
+    * for the online recommend path) broadcasts. Norms are per-doc
+    * self-norms, so the i-side norms come from the query relation and
+    * the j-side from the corpus relation — the two need not overlap
+    * (incremental merge joins old docs against a new-docs corpus
+    * side). */
   def cosinePairs(tfQueries: DataFrame, tf: DataFrame): DataFrame = {
     val a = tfQueries
       .select(col("doc_id").as("i"), col("tok"), col("tf").as("tf_a"))
@@ -91,15 +86,18 @@ object SimilarityOps {
   def cosine(dot: Column, n2a: Column, n2b: Column): Column =
     dot.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
-  /** Rank `(i, j, cos)` pairs (`j` a long, `cos` a double) per i:
+  /** T3 — rank `(i, j, cos)` pairs (`j` a long, `cos` a double) per i:
     * (cos desc, j asc), keep k. Returns unrounded `(i, j, rn, cos)`.
-    * One pass through the `graft_topk` aggregate: at most k (cos, j)
-    * entries per i in the buffer, combined map-side, so only k rows
-    * per i cross the shuffle (a `row_number()` window, the oracle
-    * SQL's form, shuffles and sorts every pair). `cos` orders as Spark
-    * sorts doubles (NaN highest), so the ranks are the window's,
-    * except that a pair with a null `cos` is skipped where the window
-    * ranks it last. */
+    * The engine's one ranked top-k: every cosine and ANN query (through
+    * [[rankTopKRounded]]), q11's top orders, q46's centroid ranking,
+    * `ProductPipeline.buildIndex` and [[mergeTopK]] call it. One pass
+    * through the `graft_topk` aggregate: at most k (cos, j) entries
+    * per i in the buffer, combined map-side, so only k rows per i
+    * cross the shuffle (a `row_number()` window, the oracle SQL's
+    * form, shuffles and sorts every pair). `cos` orders as Spark sorts
+    * doubles (NaN highest), so the ranks are the window's, except that
+    * a pair with a null `cos` is skipped where the window ranks it
+    * last. */
   def rankTopK(sims: DataFrame, k: Int): DataFrame =
     sims.groupBy("i").agg(graft_topk(col("cos"), col("j"), k).as("top"))
       .select(col("i"), posexplode(col("top")).as(Seq("p", "e")))

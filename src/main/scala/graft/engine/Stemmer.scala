@@ -3,9 +3,11 @@ package graft.engine
 /** Porter stemmer (original 1980 algorithm), hand-written from the
   * published description — replaces the reference's per-token
   * `PorterStemmer().stem(word)` lambda (`/root/reference/amazon1.py:129-130`,
-  * `big datarr.R:135-137` SnowballC). No external dependency; exposed to
-  * Spark as a UDF over `split()` output (SURVEY.md §2.11) — there is no
-  * DuckDB-SQL equivalent, so stemmed queries use the rows-only check.
+  * `big datarr.R:135-137` SnowballC). No external dependency; Spark
+  * reaches it only through the native column
+  * `graft.functions.StemText.graft_stem` (SURVEY.md §2.11) — there is
+  * no DuckDB-SQL equivalent, so stemmed queries use the rows-only
+  * check.
   */
 object Stemmer {
 

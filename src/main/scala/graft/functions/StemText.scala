@@ -6,14 +6,13 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Porter-stemming of a whitespace-separated string as a native
-  * codegen'd column — the codegen upgrade path for the stemmer UDF
-  * (SURVEY.md §2.11, §7.3).
+  * codegen'd column (SURVEY.md §2.11, §7.3) — the engine's only entry
+  * to [[graft.engine.Stemmer]].
   *
-  * Unlike the `udf()` wrapper, this generates a single static call
-  * inside whole-stage codegen: no Scala-function SerDe, no
+  * A `StaticInvoke` of [[stemText]]: a single static call inside
+  * whole-stage codegen, with no Scala-function SerDe and no
   * null-boxing, and the call participates in constant folding when the
-  * input is a literal. The stemming itself (`graft.engine.Stemmer`) is
-  * shared with the UDF path.
+  * input is a literal.
   */
 object StemText {
 

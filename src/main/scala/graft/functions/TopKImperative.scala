@@ -53,9 +53,9 @@ final class TopKBuffer(val k: Int) {
 /** T3 top-k as a native `TypedImperativeAggregate` (SURVEY.md §4 item
   * 3): one pass, at most k entries per group in the buffer, partial
   * aggregation map-side — only k (score, id) pairs per key cross the
-  * shuffle. The engine's one top-k: `SimilarityOps.rankTopK` (every
-  * cosine and ANN top-k), q46's centroid ranking and q45 all run
-  * through it. Lives in the expression layer (usable from Column
+  * shuffle. The engine's one top-k, called only by
+  * `SimilarityOps.rankTopK`, which every ranked per-key top-k goes
+  * through. Lives in the expression layer (usable from Column
   * without Dataset encoders) and keeps primitive buffers. Rows with a
   * null score or id are skipped. Output: array<struct<score double,
   * id long>> ranked by (score desc, id asc). */

@@ -24,8 +24,9 @@ object ProductPipeline {
     "discount_price", "actual_price").map(StructField(_, StringType)))
 
   /** The neighbor index's declared schema: the `(i, j, rn, cos)` rows
-    * that [[buildIndex]] ranks over `row_id`s. Its `cos` is rounded to
-    * 6 places, so this index is not a valid `SimilarityOps.mergeTopK`
+    * that [[buildIndex]] ranks over `row_id`s with
+    * `SimilarityOps.rankTopKRounded`. Its `cos` is rounded to 6
+    * places, so this index is not a valid `SimilarityOps.mergeTopK`
     * input (that needs the unrounded `rankTopK` table). */
   val IndexSchema: StructType =
     StructType.fromDDL("i BIGINT, j BIGINT, rn BIGINT, cos DOUBLE")
@@ -156,7 +157,7 @@ object ProductPipeline {
     * unbounded-corpus scale path is the LSH family in `graft.dedup`.
     * The vocabulary cap is the reference's `max_features=5000`.
     * Returns `(i, j, rn, cos)` plus the deduped base as a pair. The
-    * ranking is `SimilarityOps.cosineTopKFrom`, i.e. `rankTopKRounded`:
+    * ranking is `SimilarityOps.rankTopKRounded` over `cosinePairs`:
     * `cos` is rounded to 6 places, so the index is not a valid
     * `mergeTopK` input, which requires the unrounded `rankTopK` table
     * (an incrementally maintained index is built with `rankTopK`). */
@@ -173,7 +174,7 @@ object ProductPipeline {
       .orderBy(desc("ctf"), asc("tok")).limit(5000).select("tok")
     val tf = tfAll.join(broadcast(vocab), Seq("tok"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (base, SimilarityOps.cosineTopKFrom(tf, tf, k))
+    (base, SimilarityOps.rankTopKRounded(SimilarityOps.cosinePairs(tf, tf), k))
   }
 
   /** Persist / reload the neighbor index (`amazon1.py:155`: build

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.ann.EmbeddingOps
 import graft.engine.{Q, SimilarityOps, Tables}
-import graft.functions.{TopKScoreId, VecExprs}
+import graft.functions.VecExprs
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbor suite over `embeddings`
@@ -58,7 +58,8 @@ object AnnQueries {
     val cand = b.join(broadcast(a), Seq("tbl", "bucket"))
       .filter(col("j") =!= col("i"))
       .select("i", "j").distinct()
-    EmbeddingOps.rankPairsVec(vecs, cand, 5).orderBy("i", "rn")
+    SimilarityOps.rankTopKRounded(EmbeddingOps.simsVec(vecs, cand), 5)
+      .orderBy("i", "rn")
   }
 
   /** Embedding-cosine near-dup pairs (the fifth dedup method): the
@@ -141,22 +142,20 @@ object AnnQueries {
     val cent = vecs.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("cid"), col("qv").as("qc"), col("n2").as("nc"))
     val asims = vecs.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("cid"), SimilarityOps.cosine(
-        VecExprs.dot_q(col("qv"), col("qc")), col("n2"), col("nc")).as("acos"))
-    // each vector's 4 nearest centroids, best first: position 0 is its
-    // assignment, positions < 4 are the probes of a query vector
-    val ranked = asims.groupBy("vec_id")
-      .agg(TopKScoreId.graft_topk(col("acos"), col("cid"), 4).as("top"))
-      .select(col("vec_id"), posexplode(col("top")).as(Seq("p", "e")))
-      .select(col("vec_id"), col("e.id").as("cid"), col("p"))
+      .select(col("vec_id").as("i"), col("cid").as("j"), SimilarityOps.cosine(
+        VecExprs.dot_q(col("qv"), col("qc")), col("n2"), col("nc")).as("cos"))
+    // each vector's 4 nearest centroids, best first: rank 1 is its
+    // assignment, ranks <= 4 are the probes of a query vector
+    val ranked = SimilarityOps.rankTopK(asims, 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assign = ranked.filter(col("p") === 0)
-      .select(col("vec_id").as("j"), col("cid"))
-    val probes = ranked.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("i"), col("cid"))
+    val assign = ranked.filter(col("rn") === 1)
+      .select(col("i").as("j"), col("j").as("cid"))
+    val probes = ranked.filter(col("i") < 50)
+      .select(col("i"), col("j").as("cid"))
     val cand = broadcast(probes).join(assign, Seq("cid"))
       .filter(col("j") =!= col("i")).select("i", "j").distinct()
-    EmbeddingOps.rankPairsVec(vecs, cand, 5).orderBy("i", "rn")
+    SimilarityOps.rankTopKRounded(EmbeddingOps.simsVec(vecs, cand), 5)
+      .orderBy("i", "rn")
   }
 
   def all: Seq[Q] = Seq(q25, q26, q41, q46)

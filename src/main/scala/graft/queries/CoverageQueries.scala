@@ -168,27 +168,5 @@ object CoverageQueries {
         .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
   }
 
-  /** §2.11 UDAF / §4-3 — q11's per-customer top-3 orders by price
-    * (order key breaking ties) computed through the native
-    * `TypedImperativeAggregate` ([[graft.functions.TopKScoreId]]):
-    * expression-layer, primitive buffers, k-bounded shuffle. The oracle
-    * is the ranking-window form, so the hash-match proves the fused
-    * aggregate is semantics-identical. */
-  val q45 = Q("q45_topk_imperative",
-    """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
-      |SELECT o_custkey, o_orderkey, o_totalprice,
-      |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) {
-    (s, dir) =>
-      Tables(s, dir, "orders")
-        .groupBy("o_custkey")
-        .agg(graft.functions.TopKScoreId.graft_topk(
-          col("o_totalprice"), col("o_orderkey"), 3).as("top"))
-        .select(col("o_custkey"), posexplode(col("top")).as(Seq("idx", "e")))
-        .select(col("o_custkey"), (col("idx") + 1).cast("long").as("rn"),
-          col("e.id").as("o_orderkey"), col("e.score").as("o_totalprice"))
-        .orderBy("o_custkey", "rn")
-  }
-
-  def all: Seq[Q] = Seq(q36, q37, q38, q39, q43, q44, q45)
+  def all: Seq[Q] = Seq(q36, q37, q38, q39, q43, q44)
 }

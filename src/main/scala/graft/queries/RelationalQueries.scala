@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.engine.{CleanOps, Q, Tables, TextOps}
+import graft.engine.{CleanOps, Q, SimilarityOps, Tables, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The relational/EDA operator suite — the reference's batch-EDA program
@@ -296,21 +295,24 @@ object RelationalQueries {
         .orderBy("r_name", "n_name")
   }
 
-  /** T3-general — per-group top-k via ranking window
-    * (`amazon1.py:143-159` generalized): top-3 orders per customer,
-    * deterministic tie-break on orderkey. */
+  /** T3-general — per-group top-k (`amazon1.py:143-159` generalized):
+    * top-3 orders per customer by price, deterministic tie-break on
+    * orderkey, ranked by the engine's one top-k
+    * ([[SimilarityOps.rankTopK]]) with the orders as `(i, j, cos)`.
+    * The oracle ranks with a window. As `rankTopK` states, an order
+    * with a null `o_totalprice` is skipped where the window ranks it
+    * last; the tables hold no null totals. */
   val q11 = Q("q11_top_orders_per_cust",
     """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
       |SELECT o_custkey, o_orderkey, o_totalprice,
       |row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
       |FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin) {
     (s, dir) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-      Tables(s, dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .filter(col("rn") <= 3)
+      val orders = Tables(s, dir, "orders").select(col("o_custkey").as("i"),
+        col("o_orderkey").as("j"), col("o_totalprice").as("cos"))
+      SimilarityOps.rankTopK(orders, 3)
+        .select(col("i").as("o_custkey"), col("j").as("o_orderkey"),
+          col("cos").as("o_totalprice"), col("rn"))
         .orderBy("o_custkey", "rn")
   }
 

@@ -102,7 +102,7 @@ object TextQueries {
         col("doc_id")),
       dropStopwords = true)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    SimilarityOps.cosineTopKFrom(tfQ, tf, 10)
+    SimilarityOps.rankTopKRounded(SimilarityOps.cosinePairs(tfQ, tf), 10)
       .orderBy("i", "rn")
   }
 
@@ -138,9 +138,9 @@ object TextQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the ≤5-row neighbor set is explicitly broadcast into the
       // display join so the documents side streams with no exchange
-      // (the planner's size estimate for a window-over-joins subtree is
+      // (the planner's size estimate for a top-k-over-joins subtree is
       // far too large to pick this on its own)
-      broadcast(SimilarityOps.cosineTopKFrom(tfQ, tf, 5)
+      broadcast(SimilarityOps.rankTopKRounded(SimilarityOps.cosinePairs(tfQ, tf), 5)
         .select(col("rn"), col("j").as("doc_id"), col("cos")))
         .join(docs, Seq("doc_id"))
         .select(col("rn"), col("doc_id"), col("cos"), col("lang"),

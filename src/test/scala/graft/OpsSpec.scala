@@ -77,7 +77,8 @@ class OpsSpec extends AnyFunSuite {
     val tf = SimilarityOps.termFreq(docs(
       1L -> "alpha beta beta gamma", 2L -> "alpha beta beta gamma",
       3L -> "delta epsilon zeta"), dropStopwords = false)
-    val top = SimilarityOps.cosineTopKFrom(tf.filter(col("doc_id") < 10), tf, 5)
+    val top = SimilarityOps.rankTopKRounded(
+      SimilarityOps.cosinePairs(tf.filter(col("doc_id") < 10), tf), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(top.contains((1L, 2L, 1.0)))
     assert(top.contains((2L, 1L, 1.0)))
@@ -94,7 +95,8 @@ class OpsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val vecs = EmbeddingOps.quantizedVec(emb)
     val cand = Seq((0L, 1L), (0L, 2L)).toDF("i", "j")
-    val ranked = EmbeddingOps.rankPairsVec(vecs, cand, 2).collect()
+    val ranked = SimilarityOps.rankTopKRounded(EmbeddingOps.simsVec(vecs, cand), 2)
+      .collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(ranked.head._1 == 1L && ranked.head._2 == 1L)
     assert(ranked.find(_._1 == 1L).get._3 > 0.999)

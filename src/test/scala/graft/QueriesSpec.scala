@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestSpark.withConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integration: every registered query runs at sf0.001 and holds its
@@ -49,6 +50,31 @@ class QueriesSpec extends AnyFunSuite {
     val exact = rows("q24_ngram_jaccard")
     assert(lsh.nonEmpty)
     for ((pair, v) <- lsh) assert(exact.get(pair).contains(v), s"pair $pair")
+  }
+
+  test("q11 and q46 rows do not depend on shuffle partitions or AQE") {
+    // both rank through graft_topk, whose buffers merge in whatever order
+    // the partitions arrive; doubles compare by their bits
+    def rows(q: String) = {
+      spark.catalog.clearCache() // q46's persisted ranking is rebuilt each run
+      SparkEntry.queries(q)(spark, sf).collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case v => v
+      })
+    }
+    for (q <- Seq("q11_top_orders_per_cust", "q46_ann_ivf")) {
+      val runs = for (parts <- Seq("1", "7"); aqe <- Seq("true", "false"))
+        yield s"partitions=$parts aqe=$aqe" ->
+          withConf("spark.sql.shuffle.partitions", parts) {
+            withConf("spark.sql.adaptive.enabled", aqe)(rows(q))
+          }
+      val want = runs.head._2
+      assert(want.nonEmpty, q)
+      for ((conf, got) <- runs.tail) {
+        val firstDiff = got.zipAll(want, null, null).find { case (a, b) => a != b }
+        assert(firstDiff.isEmpty, s"$q under $conf vs ${runs.head._1}")
+      }
+    }
   }
 
   test("plan_hash_v2 normalization scrubs identity hashes, not literals") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, ntile, unix_micros}
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives each streaming operator with a MemoryStream source and a
@@ -269,6 +270,26 @@ class StreamingSpec extends AnyFunSuite {
       col("n"), col("total_value"))
     val streamed = spark.table("file_hourly").select(key: _*).collect().toSet
     q.stop()
+    val batch = graft.queries.EventQueries.q31.run(spark, dir.getPath)
+      .select(key: _*).collect().toSet
+    assert(batch.nonEmpty)
+    assert(streamed == batch)
+  }
+
+  test("hourlyCounts under Trigger.AvailableNow stops by itself with batch q31's rows") {
+    val dir = stagedEvents("sf0.001")
+    val q = StreamingOps.hourlyCounts(StreamingOps.readEvents(spark, dir.getPath))
+      .writeStream.format("memory").queryName("file_hourly_now")
+      .outputMode("update").trigger(Trigger.AvailableNow()).start()
+    // no processAllAvailable and no stop: the trigger drains what the
+    // directory holds at start, then the query terminates on its own
+    val stopped = q.awaitTermination(120000)
+    if (!stopped) q.stop()
+    assert(stopped, "AvailableNow query still running after 120 s")
+    assert(q.exception.isEmpty)
+    val key = Seq(col("hour").cast("string"), col("event_type"),
+      col("n"), col("total_value"))
+    val streamed = spark.table("file_hourly_now").select(key: _*).collect().toSet
     val batch = graft.queries.EventQueries.q31.run(spark, dir.getPath)
       .select(key: _*).collect().toSet
     assert(batch.nonEmpty)

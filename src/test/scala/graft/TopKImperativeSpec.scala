@@ -129,5 +129,13 @@ class TopKImperativeSpec extends AnyFunSuite {
       .orderBy("g").collect()
     assert(got(0).getSeq[Any](1).length == 1) // only the fully-non-null row
     assert(got(1).getSeq[Any](1).length == 1)
+    // rankTopK skips the null-score pair where row_number() would rank
+    // it last (the deviation q11 declares) and the null-id pair, and
+    // numbers what remains from 1
+    val ranked = SimilarityOps.rankTopK(
+      df.select(col("g").as("i"), col("id").as("j"), col("score").as("cos")), 5)
+      .orderBy("i", "rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(ranked == Seq((1L, 10L, 1L, 5.0), (2L, 20L, 1L, 1.0)))
   }
 }
