@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.status.api.v1.StageStatus
 
@@ -27,16 +28,18 @@ import org.apache.spark.status.api.v1.StageStatus
   * The noop sink computes every column of every row and discards it.
   * Old count()-based numbers are preserved in OPTIMIZATION_r21.md.
   *
-  * Plan observability (r21): per query, a deterministic hash of the
-  * normalized static plan plus Exchange/BroadcastExchange counts and
-  * `construct_jobs` (the Spark jobs started while the meta pass builds
-  * the query's DataFrame; 0 when construction plans only), and the
-  * meta pass's `jobs`, completed `stages` (construction plus one noop
-  * execution; skipped stages do not count) and their shuffle writes —
-  * all read from Spark's status store ([[runRecords]]), keyed by the
-  * meta pass's job description `plan-meta: <query>` — is
-  * written to SPARK_GRAFT_PLAN_META (default target/bench_plan_meta.json)
-  * and echoed to stderr — seven rounds showed up-to-16x per-query
+  * Plan observability (r21): per query, the normalized static plan
+  * text ([[planText]], stored as `plan`) and its md5 (`plan_hash_v2`)
+  * plus Exchange/BroadcastExchange counts and `construct_jobs` (the
+  * Spark jobs started while the meta pass builds the query's
+  * DataFrame; 0 when construction plans only), and the meta pass's
+  * `jobs`, completed `stages` (construction plus one noop execution of
+  * the hashed DataFrame; skipped stages do not count) and their
+  * shuffle writes — all read from Spark's status store
+  * ([[runRecords]]), keyed by the meta pass's job description
+  * `plan-meta: <query>` — is written to SPARK_GRAFT_PLAN_META (default
+  * target/bench_plan_meta.json) and, all but the text, echoed to
+  * stderr — seven rounds showed up-to-16x per-query
   * wall-time noise on identical bytecode, so plan identity, not
   * seconds, is the regression signal (`tools/plan_diff.py` compares
   * two such files). A failed phase (warmup, timed, plan-meta,
@@ -59,6 +62,12 @@ object Bench {
       .replaceAll("\\$\\$?Lambda[$/][^,\\s)\\]]*", "\\$\\$Lambda\\$x")
       // {1,16}: Integer.toHexString of an identity hash can be one digit
       .replaceAll("([\\w$\\]])@[0-9a-f]{1,16}\\b", "$1@x")
+
+  /** The static plan text Bench hashes and stores: the formatted
+    * explain of `df`, normalized by [[normalizeV2]]. Its md5 is the
+    * meta file's `plan_hash_v2`, and the text itself its `plan`. */
+  def planText(df: DataFrame, sfDir: String): String =
+    normalizeV2(df.queryExecution.explainString(FormattedMode), sfDir)
 
   /** One query's run records, read from Spark's status store: the jobs
     * whose description is `description`, their completed stages
@@ -132,27 +141,25 @@ object Bench {
     // a finally so a failing query cannot leak cache entries into the
     // next query's planning.
     def planMeta(name: String, fn: (SparkSession, String) => DataFrame)
-        : Option[(String, Int, Int, Long, Option[Array[Long]])] =
+        : Option[(String, String, Int, Int, Long, Option[Array[Long]])] =
       try {
         val df = fn(spark, sfDir)
         val constructJobs = counters(name)(2)
-        val qe = df.queryExecution
-        val plan = qe.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        val hashV2 = graft.dedup.MinHashLocal.md5hex(normalizeV2(plan, sfDir))
+        val plan = planText(df, sfDir)
+        val hashV2 = graft.dedup.MinHashLocal.md5hex(plan)
         // counts from the one-line-per-operator tree (the formatted
         // string lists operators twice: tree + details)
-        val tree = qe.executedPlan.toString
+        val tree = df.queryExecution.executedPlan.toString
         val bcasts = "BroadcastExchange".r.findAllMatchIn(tree).length
         val shuffles = "\\bExchange\\b".r.findAllMatchIn(tree).length
-        // one extra noop execution to measure shuffle bytes, jobs and
-        // stages (outside the timed runs; the warmup made codegen costs
-        // already sunk)
+        // one extra noop execution of the hashed DataFrame to measure
+        // shuffle bytes, jobs and stages (outside the timed runs; the
+        // warmup made codegen costs already sunk)
         val sb = try {
-          runOnce(fn(spark, sfDir))
+          runOnce(df)
           Some(counters(name))
         } catch { case e: Throwable => failed(name, "shuffle-meta", e); None }
-        Some((hashV2, shuffles, bcasts, constructJobs, sb))
+        Some((plan, hashV2, shuffles, bcasts, constructJobs, sb))
       } catch { case e: Throwable => failed(name, "plan-meta", e); None }
       finally {
         try spark.catalog.clearCache() catch { case _: Throwable => () }
@@ -173,12 +180,12 @@ object Bench {
       name -> planMeta(name, fn)
     }
     val metaJson = metas.map { case (n, meta) =>
-      val planJson = meta.map { case (h2, ex, bc, cj, sb) =>
+      val planJson = meta.map { case (plan, h2, ex, bc, cj, sb) =>
         val sbJson = sb.map { case Array(b, r, j, st) =>
           s""","shuffle_bytes":$b,"shuffle_records":$r,"jobs":$j,"stages":$st""" }
           .getOrElse("")
         s""""plan_hash_v2":"$h2","exchanges":$ex,"broadcasts":$bc,""" +
-          s""""construct_jobs":$cj$sbJson"""
+          s""""construct_jobs":$cj$sbJson,"plan":${Verify.jsonString(plan)}"""
       }
       val errJson = errors.get(n).map(e => s""""error":${Verify.jsonString(e)}""")
       s""""$n":""" + (planJson ++ errJson).mkString("{", ",", "}")
@@ -192,7 +199,7 @@ object Bench {
         s"${e.getClass.getName}: ${e.getMessage}")
     }
     metas.foreach {
-      case (n, Some((h2, ex, bc, cj, sb))) =>
+      case (n, Some((_, h2, ex, bc, cj, sb))) =>
         val sbTxt = sb.map { case Array(b, r, j, st) =>
           s" shuffleBytes=$b records=$r jobs=$j stages=$st" }.getOrElse("")
         System.err.println(

@@ -3,7 +3,7 @@ package graft.ann
 import graft.dedup.MinHashLocal
 import graft.engine.SimilarityOps
 import graft.functions.VecExprs
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`Array[Float]`) — the
@@ -34,7 +34,6 @@ object EmbeddingOps {
   /** 16 hyperplanes grouped into 4 hash tables of 4 planes each
     * (OR-amplification: a pair is a candidate if it collides in ANY
     * table — recall ≈ 1-(1-p^4)^4 instead of p^4). */
-  val NumPlanes = 16
   val PlanesPerTable = 4
   val Dims = 64
 
@@ -95,7 +94,7 @@ object EmbeddingOps {
   def planeWeight(p: Int, d: Int): Int =
     Integer.parseInt(MinHashLocal.md5hex(s"plane$p|$d").substring(0, 1), 16) - 8
 
-  def planesSql(numPlanes: Int = NumPlanes): String =
+  def planesSql(numPlanes: Int): String =
     s"""SELECT p, d, instr('0123456789abcdef',
        |  substr(md5('plane' || CAST(p AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1, 1)) - 9 AS wt
        |FROM range($numPlanes) t(p), range($Dims) u(d)""".stripMargin

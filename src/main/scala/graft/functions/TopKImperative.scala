@@ -58,7 +58,16 @@ final class TopKBuffer(val k: Int) {
   * through. Lives in the expression layer (usable from Column
   * without Dataset encoders) and keeps primitive buffers. Rows with a
   * null score or id are skipped. Output: array<struct<score double,
-  * id long>> ranked by (score desc, id asc). */
+  * id long>> ranked by (score desc, id asc).
+  *
+  * Why not Spark's own `CollectTopK` (Spark 4.1.2): it is not a
+  * registered SQL function (`UNRESOLVED_ROUTINE`), and as a Column,
+  * `new CollectTopK(when(notnull, struct(score, ~id)), k)` returned
+  * rows hashing identically to `rankTopK`'s (NaN, ±0.0 and nulls
+  * handled the same) but ran about 2× slower: over 3 M pairs at
+  * `local[3]`, k = 10, median of 6 alternating runs, 1,381 ms against
+  * 592 ms for 1,000 keys and 2,416 ms against 1,195 ms for 100,000
+  * keys. */
 case class TopKScoreId(
     left: Expression, // score
     right: Expression, // id

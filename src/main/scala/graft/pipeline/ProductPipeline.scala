@@ -123,9 +123,9 @@ object ProductPipeline {
     * normalizes floating-point keys (-0.0 reads back as 0.0, every NaN
     * as the canonical NaN). Columns keep `df`'s order. */
   def dedupKeepFirst(df: DataFrame): DataFrame = {
-    val keyCols = df.columns.filterNot(_ == "row_id").map(col _)
+    val keyCols = df.columns.filterNot(_ == "row_id").map(col _).toIndexedSeq
     df.groupBy(keyCols: _*).agg(min(col("row_id")).as("row_id"))
-      .select(df.columns.map(col _): _*)
+      .select(df.columns.map(col _).toIndexedSeq: _*)
   }
 
   /** T1 — top-10 by cleaned ratings count (`amazon1.py:63-64`); pandas

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.engine.{Q, Tables, TextOps}
-import graft.text.TextAnalysis
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,12 +10,20 @@ import org.apache.spark.sql.functions._
   * bit-identical doubles across engines. */
 object AnalysisQueries {
 
-  private val langs = TextAnalysis.Markers.map(_._1)
+  /** Language-marker word lists for the language-ID heuristic (q27).
+    * Deterministic scoring: count tokens hitting each language's marker
+    * list, argmax with fixed tie order en > es > de > fr. */
+  private val Markers: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "to", "is", "in", "that", "it"),
+    "es" -> Seq("el", "la", "de", "que", "los", "las", "es", "un"),
+    "de" -> Seq("der", "die", "und", "das", "ist", "ein", "nicht", "mit"),
+    "fr" -> Seq("le", "les", "et", "des", "est", "une", "pas", "pour"))
 
   /** Language ID by marker-word hit counts, fixed tie order. */
   val q27 = {
-    val scoreSelSql = langs.map(l =>
-      s"CAST(sum(CASE WHEN tok IN ${TextAnalysis.markersSql(l)} THEN 1 ELSE 0 END) AS BIGINT) AS score_$l")
+    val scoreSelSql = Markers.map { case (l, words) =>
+      val inList = words.map(w => s"'$w'").mkString("(", ", ", ")")
+      s"CAST(sum(CASE WHEN tok IN $inList THEN 1 ELSE 0 END) AS BIGINT) AS score_$l" }
       .mkString(", ")
     Q("q27_lang_id",
       s"""WITH toks AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok FROM documents),
@@ -34,7 +41,7 @@ object AnalysisQueries {
       // the exchange)
       val toks = Tables(s, dir, "documents")
         .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-      val scoreCols = TextAnalysis.Markers.map { case (l, words) =>
+      val scoreCols = Markers.map { case (l, words) =>
         sum(when(col("tok").isin(words: _*), 1).otherwise(0)).cast("long").as(s"score_$l")
       }
       toks.groupBy("doc_id").agg(scoreCols.head, scoreCols.tail: _*)

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.engine.{CleanOps, Q, SimilarityOps, Tables, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The relational/EDA operator suite — the reference's batch-EDA program

@@ -85,6 +85,24 @@ class QueriesSpec extends AnyFunSuite {
         "Topk$@x Scan parquet <SF_DIR>/documents.parquet")
   }
 
+  test("Bench.planText does not depend on what the session built before") {
+    val qs = Seq("q22_lsh_neardup", "q46_ann_ivf")
+    def texts() = {
+      spark.catalog.clearCache() // q46 persists its ranking
+      qs.map(q => Bench.planText(SparkEntry.queries(q)(spark, sf), sf))
+    }
+    val first = texts()
+    // building other queries moves the session's expression ids on
+    for (q <- Seq("q01_top_parts", "q18_cosine_topk", "q27_lang_id", "q41_embed_neardup"))
+      SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+    val again = texts()
+    for ((q, a, b) <- qs.lazyZip(first).lazyZip(again)) {
+      assert(a == b, q)
+      assert("#\\d".r.findFirstIn(a).isEmpty, q)
+      assert(a.contains("<SF_DIR>"), q)
+    }
+  }
+
   test("q01 top-parts is sorted desc with deterministic ties") {
     val rows = SparkEntry.queries("q01_top_parts")(spark, sf).collect()
     val prices = rows.map(_.getDouble(3)).toSeq
