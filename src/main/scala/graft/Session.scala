@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session of the mains (Bench, Plans, Verify): `cpus` task
+/** The local session of the mains (Bench, Verify): `cpus` task
   * slots and shuffle partitions, UTC, no UI.
   *
   * `preferSortMergeJoin=false` allows a shuffled hash join where its

@@ -11,8 +11,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (FIXTURES.md §A). Each stage is a pure DataFrame function; the
   * driver-table generalizations live in `graft.queries`, this is the
   * faithful end-to-end replica. Building a stage's DataFrame runs no
-  * Spark job, except in `loadCsv`: it counts each partition's rows
-  * eagerly, because the dense `row_id` needs them.
+  * Spark job, `loadCsv` included.
   */
 object ProductPipeline {
 
@@ -39,56 +38,23 @@ object ProductPipeline {
     *
     * Header rule: each file's header must name the declared columns in
     * the declared order (`enforceSchema=false`). A header that does not
-    * fails the load with Spark's "CSV header does not conform to the
-    * schema" error, instead of its columns being shifted by position
-    * into the declared names.
+    * fails the first action on the result with Spark's "CSV header does
+    * not conform to the schema" error, instead of its columns being
+    * shifted by position into the declared names.
     *
-    * Scale-safe id derivation, Catalyst-native (r22): `row_id` is the
-    * same 0-based (partition, offset) total order that r21's RDD
-    * `zipWithIndex` produced — `monotonically_increasing_id()` encodes
-    * exactly (partitionId << 33) + offset, so `base(partition) +
-    * offset` with bases from one small per-partition count job (the
-    * very job zipWithIndex ran) is value-identical. Unlike the RDD
-    * round-trip, the CSV file-source relation survives: downstream
-    * column pruning still reaches the scan, no eager whole-row
-    * Row-boxing pass, and the ingest plan stays whole-stage codegen
-    * (the r21 form replaced the scan with a LogicalRDD, losing both —
-    * ADVICE r21). The r20 single-task global window remains gone.
-    * Both the count job and the final read plan the same file splits
-    * (same session, files and conf → deterministic planning), which
-    * PipelineSpec's repeated-load determinism test pins; if they ever
-    * diverge, the read fails (see the guard below). The count job is
-    * the only job this function runs. */
-  def loadCsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.schema(ProductSchema).option("header", "true")
+    * `row_id` is `monotonically_increasing_id()` on the scan that reads
+    * the row: `(partition index << 33) + offset in the partition`. It is
+    * unique while every partition holds fewer than 2^33 rows, and it
+    * ascends in scan order. Spark plans a directory's files largest
+    * first, so across files the ids ascend in decreasing file size, and
+    * within a file in line order. A single-split input (one file below
+    * the split size) numbers its rows 0, 1, 2, … in line order. Across
+    * splits the ids are not dense; dedup, lookup, [[top10]] and the
+    * neighbor ranking read them only through `min` and ascending order. */
+  def loadCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ProductSchema).option("header", "true")
       .option("enforceSchema", "false").csv(path)
-    val mid = monotonically_increasing_id()
-    val offsetMask = (1L << 33) - 1
-    val counts = raw.select(shiftright(mid, 33).as("pid"))
-      .groupBy("pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val bases = counts.map { case (pid, n) => val b = acc; acc += n; (pid, b, n) }
-    import spark.implicits._
-    val baseDf = bases.toSeq.toDF("__pid", "__base", "__n")
-    val offset = col("__mid").bitwiseAND(offsetMask)
-    // LEFT join + loud guard: the counts job and this read plan the
-    // same splits in practice (same session/files/conf), but if they
-    // ever diverge, a pid unseen by the counts job or an offset past
-    // its count must FAIL the load — an inner join would silently drop
-    // rows, and an unchecked offset would collide with the next base
-    raw.withColumn("__mid", mid)
-      .withColumn("__pid", shiftright(col("__mid"), 33))
-      .join(broadcast(baseDf), Seq("__pid"), "left")
-      .withColumn("row_id",
-        when(col("__base").isNull || offset >= col("__n"), raise_error(concat(
-          lit("loadCsv: partition planning diverged between the " +
-            "per-partition count job and the read (pid "),
-          col("__pid"), lit(" offset "), offset,
-          lit(" has no counted row)"))).cast("long"))
-          .otherwise(col("__base") + offset))
-      .drop("__pid", "__base", "__n", "__mid")
-  }
+      .withColumn("row_id", monotonically_increasing_id())
 
   /** E1 cleaning — P1 ×4 (`amazon1.py:51-59`) + P2/P3 discount
     * derivations (`amazon1.py:87-89`) with the NaN-vs-null policy of

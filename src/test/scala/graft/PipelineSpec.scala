@@ -1,6 +1,7 @@
 package graft
 
 import graft.pipeline.{HtmlSink, ProductPipeline => P}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -102,14 +103,17 @@ class PipelineSpec extends AnyFunSuite {
     assert(none.count() == 0)
   }
 
+  private val e3Queries = Seq("Dell Wireless Mouse WM126",
+    "oneplus-nord-ce-2-lite", "no-such-product-xyz", "")
+
   test("E3: recommend builds its plan without running a job, and pins the rows") {
-    // materialise the lazy fixture first: loading the CSV runs jobs
-    assert(base.columns.nonEmpty && neighbors.columns.nonEmpty)
-    val queries = Seq("Dell Wireless Mouse WM126", "oneplus-nord-ce-2-lite",
-      "no-such-product-xyz", "")
-    val (recs, jobs) = TestSpark.withJobCount(
-      queries.map(q => q -> P.recommend(base, neighbors, q)))
-    assert(jobs == 0, "building a recommend plan started a job")
+    // the whole program, from a fresh load of the CSV to the recommend
+    // plans, is built without reading any data
+    val (recs, jobs) = TestSpark.withJobCount {
+      val (b, n) = P.buildIndex(P.clean(P.loadCsv(spark, fixture)))
+      e3Queries.map(q => q -> P.recommend(b, n, q))
+    }
+    assert(jobs == 0, "building the pipeline up to recommend started a job")
     val dell = Seq(
       Seq(1L, "Dell Wired Mouse MS116", 4.0, 2345.0, 399.0, 799.0,
         "IMGDELL2", "dell-wired-mouse-ms116/dp/B02"),
@@ -160,40 +164,103 @@ class PipelineSpec extends AnyFunSuite {
     assert(direct == viaDisk)
   }
 
-  test("S2: multi-file load assigns deterministic dense row_ids, no global window") {
-    // split the fixture into 3 single-row-group CSV parts; row_ids must
-    // stay a dense 0..n-1 permutation in (file, offset) order on both
-    // loads, and the plan must not contain the old single-task
-    // no-partition window
+  /** Writes the fixture's rows, in line order, into one CSV part per
+    * entry of `sizes` (that many rows each, header on every part). */
+  private def splitFixture(sizes: Seq[Int]): java.nio.file.Path = {
     val lines = scala.io.Source.fromFile(fixture, "UTF-8").getLines().toVector
-    val (header, body) = (lines.head, lines.tail)
+    val (header, body) = (lines.head, lines.tail.filter(_.nonEmpty))
+    assert(sizes.sum == body.size)
     val dir = java.nio.file.Files.createTempDirectory("graft_multicsv")
-    body.grouped((body.size + 2) / 3).zipWithIndex.foreach { case (part, i) =>
-      java.nio.file.Files.write(dir.resolve(f"part-$i%03d.csv"),
-        (header +: part).mkString("\n").getBytes("UTF-8"))
+    sizes.scanLeft(0)(_ + _).zip(sizes).zipWithIndex.foreach {
+      case ((from, n), i) => java.nio.file.Files.write(
+        dir.resolve(f"part-$i%03d.csv"),
+        (header +: body.slice(from, from + n)).mkString("\n").getBytes("UTF-8"))
     }
+    dir
+  }
+
+  private def partSizes(dir: java.nio.file.Path): Seq[(String, Long)] =
+    dir.toFile.listFiles().toSeq.sortBy(_.getName)
+      .map(f => f.toString -> f.length())
+
+  test("S2: multi-file load assigns deterministic dense row_ids, no global window") {
+    // with `minPartitionNum` 1 Spark packs the 3 small parts into one
+    // split, so the ids the scan assigns are a dense 0..n-1 on both
+    // loads, and the plan holds no single-task no-partition window
+    val dir = splitFixture(Seq(7, 7, 7))
+    TestSpark.withConf("spark.sql.files.minPartitionNum", "1") {
+      val a = P.loadCsv(spark, dir.toString)
+      val b = P.loadCsv(spark, dir.toString)
+      val idsA = a.select("row_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(idsA == (0L until 21).toSeq, "dense 0..n-1 ids")
+      val key = (df: DataFrame) => df.select("name", "row_id").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(key(a) == key(b), "row_id assignment deterministic across loads")
+      val plan = a.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window"), "no global window at ingest")
+      assert(!plan.contains("ExistingRDD") && !plan.contains("Scan rdd"),
+        "no RDD scan at ingest")
+      assert(plan.contains("Scan csv"), "CSV file-source scan survives")
+    }
+  }
+
+  test("S2: multi-file load assigns unique scan-order row_ids, deterministic, no global window") {
+    // parts grow in file order, so the scan's largest-first order is
+    // not the file-name order
+    val dir = splitFixture(Seq(4, 7, 10))
+    val parts = partSizes(dir)
+    assert(parts.map(_._2) == parts.map(_._2).sorted.distinct)
     val a = P.loadCsv(spark, dir.toString)
     val b = P.loadCsv(spark, dir.toString)
-    val n = body.count(_.nonEmpty)
-    val idsA = a.select("row_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(idsA == (0L until n).toSeq, "dense 0..n-1 ids")
-    val keyA = a.select("name", "row_id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val keyB = b.select("name", "row_id").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(keyA == keyB, "row_id assignment deterministic across loads")
+    val ids = a.select("row_id").collect().map(_.getLong(0)).toSeq
+    assert(ids.size == 21 && ids.distinct.size == ids.size, "unique ids")
+    // by row_id: each file's rows in line order, files in decreasing size
+    val expected = parts.sortBy(-_._2).flatMap { case (part, _) =>
+      spark.read.schema(P.ProductSchema).option("header", "true")
+        .csv(part).collect().toSeq
+    }
+    val byId = a.orderBy("row_id").collect().toSeq
+    assert(byId.map(r => Row.fromSeq(r.toSeq.init)) == expected)
+    assert(b.orderBy("row_id").collect().toSeq == byId,
+      "row_id assignment deterministic across loads")
     val plan = a.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), "no global window at ingest")
-    // r22: row_id derivation is Catalyst-native — the CSV file-source
-    // relation must survive (column pruning reaches the scan) instead
-    // of being swallowed by an RDD round-trip
+    // the CSV file-source relation survives (column pruning reaches the
+    // scan) instead of being swallowed by an RDD round-trip
     assert(!plan.contains("ExistingRDD") && !plan.contains("Scan rdd"),
       "no RDD scan at ingest")
     assert(plan.contains("Scan csv"), "CSV file-source scan survives")
+
+    // parts that shrink in file order are scanned in line order, so the
+    // ids are an order-preserving relabel of the single file's 0..20 and
+    // the program serves the single file's results
+    val shrinking = splitFixture(Seq(10, 7, 4))
+    val sizes = partSizes(shrinking).map(_._2)
+    assert(sizes == sizes.sorted.reverse.distinct)
+    val split = P.loadCsv(spark, shrinking.toString)
+    val splitIds = split.select("row_id").collect().map(_.getLong(0)).sorted
+    assert(splitIds.last >= (1L << 34), "one partition per part")
+    val relabel = splitIds.zip(raw.select("row_id").collect()
+      .map(_.getLong(0)).sorted).toMap
+    assert(split.orderBy("row_id").collect().toSeq
+      .map(r => r.toSeq.init :+ relabel(r.getLong(9))) ==
+      raw.orderBy("row_id").collect().toSeq.map(_.toSeq),
+      "the relabel maps each row to itself")
+    val (sBase, sNeighbors) = P.buildIndex(P.clean(split))
+    assert(sNeighbors.collect().map(r => (relabel(r.getLong(0)),
+      relabel(r.getLong(1)), r.getLong(2), r.getDouble(3))).toSet ==
+      neighbors.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet, "same index under the relabel")
+    assert(P.top10(sBase).collect().toSeq == P.top10(base).collect().toSeq)
+    for (q <- e3Queries)
+      assert(P.recommend(sBase, sNeighbors, q).collect().toSeq ==
+        P.recommend(base, neighbors, q).collect().toSeq, q)
   }
 
-  test("S2: loadCsv fails loudly when a partition holds more rows than it counted") {
+  test("S2: row_ids come from the scan that reads the rows") {
     // same byte length, so the read plans the same single split, but 6
-    // rows where the count job saw 3: offsets 3..5 have no counted row
-    // and would collide with the next partition's ids
+    // rows where construction saw 3: the ids number the rows the scan
+    // reads, since nothing is counted before it
     val file = java.nio.file.Files.createTempFile("graft_diverge", ".csv")
     val csv = (names: Seq[String]) =>
       (P.ProductSchema.fieldNames.toSeq +: names.map(_ +: Seq.fill(8)("")))
@@ -204,9 +271,9 @@ class PipelineSpec extends AnyFunSuite {
     java.nio.file.Files.write(file, before.getBytes("UTF-8"))
     val df = P.loadCsv(spark, file.toString)
     java.nio.file.Files.write(file, after.getBytes("UTF-8"))
-    val e = intercept[Exception](df.select("row_id").collect())
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("loadCsv:")), e)
+    val rows = df.select("name", "row_id").orderBy("row_id").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(rows == Seq("aa", "bb", "cc", "dd", "ee", "ff").zip(0L until 6))
   }
 
   private def tempCsv(lines: Seq[String]): String = {
