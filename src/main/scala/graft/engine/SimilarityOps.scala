@@ -43,6 +43,16 @@ object SimilarityOps {
     filtered.groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
   }
 
+  /** The vocabulary cap (`amazon1.py:133` `max_features=5000`). */
+  val VocabSize = 5000
+
+  /** M3 — the vocabulary: the top [[VocabSize]] tokens of `df` by
+    * `weight` aggregated per token, as `(term, corpus_tf)`, ties broken
+    * alphabetically (SURVEY.md §2.10 M3). */
+  def vocabulary(df: DataFrame, weight: Column): DataFrame =
+    df.groupBy(col("tok").as("term")).agg(weight.as("corpus_tf"))
+      .orderBy(desc("corpus_tf"), asc("term")).limit(VocabSize)
+
   def termFreqSql(dropStopwords: Boolean): String = {
     val stop = if (dropStopwords) s"WHERE tok NOT IN ${TextOps.StopWordsSql}" else ""
     s"""SELECT doc_id, tok, count(*) AS tf FROM (
@@ -60,8 +70,8 @@ object SimilarityOps {
     * for the online recommend path) broadcasts. Norms are per-doc
     * self-norms, so the i-side norms come from the query relation and
     * the j-side from the corpus relation — the two need not overlap
-    * (incremental merge joins old docs against a new-docs corpus
-    * side). */
+    * ([[mergeTopK]] joins a new-docs query side against the old
+    * corpus). */
   def cosinePairs(tfQueries: DataFrame, tf: DataFrame): DataFrame = {
     val a = tfQueries
       .select(col("doc_id").as("i"), col("tok"), col("tf").as("tf_a"))
@@ -114,24 +124,32 @@ object SimilarityOps {
     * an existing top-k neighbor table without a full rebuild. Sound
     * because merging only ADDS candidates: an old pair absent from the
     * old top-k is dominated by k still-present better pairs and can
-    * never enter the new top-k. Cost is |new docs| × inverted-index
-    * postings — at 100 TB this is the difference between an ingest
-    * batch and recomputing the corpus.
+    * never enter the new top-k.
+    *
+    * Each new pair is computed once, with the bounded batch as the
+    * broadcast query side: `withOld` gives the new docs' old neighbors
+    * and, mirrored as `(j, i, cos)`, the old lists' updates; `withNew`
+    * gives the new-new pairs. A mirrored row is the value a rebuild
+    * computes: the same exact integer dot over the same two norms, and
+    * IEEE multiplication commutes. Precondition: old and new doc ids
+    * are disjoint. Cost: one norm pass over the old corpus (the
+    * `withOld` j-norms) and a re-rank of every list.
     *
     * `existing` must be the UNROUNDED table from [[rankTopK]] (ranking
     * merged rounded and unrounded scores would be order-unstable).
     * Returns the same shape, re-ranked. */
   def mergeTopK(existing: DataFrame, tfOld: DataFrame, tfNew: DataFrame,
       k: Int): DataFrame = {
-    val tfAll = tfOld.unionByName(tfNew)
-    val newLists = cosinePairs(tfNew, tfAll) // new docs get full lists
-    // new docs entering old lists: cosine is symmetric, so compute with
-    // the BOUNDED batch as the broadcast query side and swap the pair —
-    // never broadcast the old corpus
-    val updates = cosinePairs(tfNew, tfOld)
-      .select(col("j").as("i"), col("i").as("j"), col("cos"))
+    val withOld = cosinePairs(tfNew, tfOld)
+    val withNew = cosinePairs(tfNew, tfNew)
+    // each `withOld` row yields both orientations: a self-union would
+    // compute `withOld` twice, as Spark reuses no exchange over a
+    // persisted tf read twice in one plan
+    val bothWays = withOld.select(inline(array(
+      struct(col("i"), col("j"), col("cos")),
+      struct(col("j").as("i"), col("i").as("j"), col("cos")))))
     rankTopK(existing.select("i", "j", "cos")
-      .unionByName(newLists).unionByName(updates), k)
+      .unionByName(bothWays).unionByName(withNew), k)
   }
 
   /** Oracle CTE block shared by the cosine queries: `tf`, `norms`,

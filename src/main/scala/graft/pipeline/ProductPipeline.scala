@@ -4,6 +4,7 @@ import graft.engine.{CleanOps, SimilarityOps, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's complete program — E1 batch EDA, E2 offline index
   * build, E3 online recommend (`/root/reference/amazon1.py`) — as one
@@ -22,11 +23,9 @@ object ProductPipeline {
     "sub_category", "image", "link", "ratings", "no_of_ratings",
     "discount_price", "actual_price").map(StructField(_, StringType)))
 
-  /** The neighbor index's declared schema: the `(i, j, rn, cos)` rows
-    * that [[buildIndex]] ranks over `row_id`s with
-    * `SimilarityOps.rankTopKRounded`. Its `cos` is rounded to 6
-    * places, so this index is not a valid `SimilarityOps.mergeTopK`
-    * input (that needs the unrounded `rankTopK` table). */
+  /** The neighbor index's declared schema: the unrounded
+    * `(i, j, rn, cos)` rows that [[buildIndex]] ranks over `row_id`s
+    * with `SimilarityOps.rankTopK`. */
   val IndexSchema: StructType =
     StructType.fromDDL("i BIGINT, j BIGINT, rn BIGINT, cos DOUBLE")
 
@@ -116,31 +115,41 @@ object ProductPipeline {
   def searchTerms(c: Column): Column =
     graft.functions.StemText.graft_stem(TextOps.normalize(c))
 
-  /** E2 — offline neighbor-index build (`amazon1.py:116-179`): dedup →
-    * dropna(name) → search_terms → TF with vocab cap (M3) → all-pairs
-    * exact cosine → per-row top-k (T3). All-pairs is the reference's
-    * own semantics and is meant for the ≈10k-row products table; the
-    * unbounded-corpus scale path is the LSH family in `graft.dedup`.
-    * The vocabulary cap is the reference's `max_features=5000`.
-    * Returns `(i, j, rn, cos)` plus the deduped base as a pair. The
-    * ranking is `SimilarityOps.rankTopKRounded` over `cosinePairs`:
-    * `cos` is rounded to 6 places, so the index is not a valid
-    * `mergeTopK` input, which requires the unrounded `rankTopK` table
-    * (an incrementally maintained index is built with `rankTopK`). */
+  /** E2 — offline neighbor-index build (`amazon1.py:116-179`):
+    * [[indexBase]] → [[indexTf]] → all-pairs exact cosine → per-row
+    * top-k (T3). All-pairs is the reference's own semantics and is
+    * meant for the ≈10k-row products table; the unbounded-corpus scale
+    * path is the LSH family in `graft.dedup`. Returns the deduped base
+    * and the unrounded `(i, j, rn, cos)` ranking of
+    * `SimilarityOps.rankTopK`: the index `SimilarityOps.mergeTopK`
+    * takes, [[saveIndex]] writes and [[IndexSchema]] reads. Only the
+    * query outputs round `cos`; [[recommend]] does not read it. */
   def buildIndex(products: DataFrame, k: Int = 10): (DataFrame, DataFrame) = {
-    val base = dedupKeepFirst(products)
+    val base = indexBase(products)
+    val tf = indexTf(base)
+    (base, SimilarityOps.rankTopK(SimilarityOps.cosinePairs(tf, tf), k))
+  }
+
+  /** The index's base: dedup keep-first → dropna(name) (F1) → the
+    * shortened `image_id` and `link_id` (P7/P8), persisted. */
+  def indexBase(products: DataFrame): DataFrame =
+    dedupKeepFirst(products)
       .na.drop(Seq("name"))
       .withColumn("image_id", shortenImageUrl(col("image")))
       .withColumn("link_id", shortenLink(col("link")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The term frequencies the index ranks: `(doc_id, tok, tf)` over
+    * the base's `search_terms`, stopwords dropped, capped to the
+    * `SimilarityOps.vocabulary` by corpus term frequency (M3, the
+    * reference's `max_features=5000`), persisted. */
+  def indexTf(base: DataFrame): DataFrame = {
     val docs = base.select(col("row_id").as("doc_id"),
       searchTerms(col("name")).as("text"))
-    val tfAll = SimilarityOps.termFreq(docs, dropStopwords = true)
-    val vocab = tfAll.groupBy("tok").agg(sum(col("tf")).as("ctf"))
-      .orderBy(desc("ctf"), asc("tok")).limit(5000).select("tok")
-    val tf = tfAll.join(broadcast(vocab), Seq("tok"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (base, SimilarityOps.rankTopKRounded(SimilarityOps.cosinePairs(tf, tf), k))
+    val tf = SimilarityOps.termFreq(docs, dropStopwords = true)
+    tf.join(broadcast(SimilarityOps.vocabulary(tf, sum(col("tf")))),
+      col("tok") === col("term"), "left_semi")
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Persist / reload the neighbor index (`amazon1.py:155`: build

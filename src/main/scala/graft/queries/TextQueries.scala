@@ -41,13 +41,13 @@ object TextQueries {
   /** M3 — vocabulary build: top-5000 terms by corpus-wide term
     * frequency, alphabetical tie-break (`amazon1.py:133`
     * `max_features=5000`; tie rule made explicit for determinism,
-    * SURVEY.md §2.10 M3). */
+    * SURVEY.md §2.10 M3) — `SimilarityOps.vocabulary`, numbered. */
   val q17 = Q("q17_vocab",
     s"""WITH tf AS (${SimilarityOps.termFreqSql(dropStopwords = true)})
       |SELECT term, corpus_tf, vocab_id FROM (
       |SELECT tok AS term, CAST(sum(tf) AS BIGINT) AS corpus_tf,
       |row_number() OVER (ORDER BY CAST(sum(tf) AS BIGINT) DESC, tok) AS vocab_id
-      |FROM tf GROUP BY tok) WHERE vocab_id <= 5000 ORDER BY vocab_id""".stripMargin) {
+      |FROM tf GROUP BY tok) WHERE vocab_id <= ${SimilarityOps.VocabSize} ORDER BY vocab_id""".stripMargin) {
     (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       // corpus_tf = Σ_doc tf(doc, tok) = plain occurrence count, so the
@@ -59,10 +59,7 @@ object TextQueries {
       // TakeOrderedAndProject(5000) first, THEN the global ranking
       // window runs over at most 5000 rows — never a full-vocab
       // single-partition sort at scale.
-      toks.groupBy(col("tok").as("term"))
-        .agg(count(lit(1)).as("corpus_tf"))
-        .orderBy(desc("corpus_tf"), asc("term"))
-        .limit(5000)
+      SimilarityOps.vocabulary(toks, count(lit(1)))
         .withColumn("vocab_id",
           row_number().over(Window.orderBy(desc("corpus_tf"), asc("term"))).cast("long"))
         .select("term", "corpus_tf", "vocab_id")

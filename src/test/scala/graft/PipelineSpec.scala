@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.SimilarityOps
 import graft.pipeline.{HtmlSink, ProductPipeline => P}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -77,14 +78,41 @@ class PipelineSpec extends AnyFunSuite {
     val acmeIds = base.filter(lower(col("name")).startsWith("acme"))
       .select("row_id").collect().map(_.getLong(0)).toSet
     assert(acmeIds.size == 3)
+    // the index is unrounded, and an unrounded self-cosine can read
+    // 0.9999999999999998 (n2 / (sqrt(n2) * sqrt(n2))), so the check
+    // reads the 6-place view the query outputs show
     val among = neighbors
       .filter(col("i").isin(acmeIds.toSeq: _*) && col("rn") <= 2)
+      .select(col("i"), col("j"), col("rn"), round(col("cos"), 6))
       .collect()
+    assert(among.length == 6)
     for (r <- among) {
       assert(r.getLong(0) != r.getLong(1), "self excluded")
       assert(acmeIds.contains(r.getLong(1)))
       assert(r.getDouble(3) == 1.0)
     }
+  }
+
+  test("E2: a batch merged into buildIndex's index equals a rebuild") {
+    // split by row_id: the two parts' ids are disjoint, and the cut
+    // puts one Acme row in the first part and two in the second, so
+    // the batch has old neighbours and neighbours of its own
+    val (part0, part1) = (cleaned.filter(col("row_id") < 12),
+      cleaned.filter(col("row_id") >= 12))
+    val (_, index0) = P.buildIndex(part0)
+    val tf0 = P.indexTf(P.indexBase(part0))
+    val tf1 = P.indexTf(P.indexBase(part1))
+    val bits = TestSpark.topKBits _
+    val tfAll = tf0.unionByName(tf1)
+    val rebuilt = bits(SimilarityOps.rankTopK(SimilarityOps.cosinePairs(tfAll, tfAll), 10))
+    // the fixture's vocabulary is far below the cap, so it does not bind
+    assert(tfAll.select("tok").distinct().count() < SimilarityOps.VocabSize)
+    assert(bits(index0) == bits(SimilarityOps.rankTopK(SimilarityOps.cosinePairs(tf0, tf0), 10)))
+    assert(rebuilt.exists(r => r._1 < 12 && r._2 >= 12), "old lists gain new neighbours")
+    assert(bits(SimilarityOps.mergeTopK(index0, tf0, tf1, 10)) == rebuilt)
+    // the duplicate rows both fall in the first part, so the two parts'
+    // dedup is the whole fixture's and the rebuild is buildIndex's index
+    assert(bits(neighbors) == rebuilt)
   }
 
   test("E3: exact-name query returns similar mice (reference example shape)") {

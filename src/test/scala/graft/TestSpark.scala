@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
@@ -33,6 +33,12 @@ object TestSpark {
     val out = body
     (out, lastJob - before)
   }
+
+  /** An `(i, j, rn, cos)` top-k table's rows, `cos` as its raw bits, so
+    * two tables compare equal only when every double is bit-equal. */
+  def topKBits(df: DataFrame): Set[(Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
 
   /** Runs `body` with the session conf `key` set to `value`, then puts
     * the previous value back. */
